@@ -276,7 +276,8 @@ object PipelineDemo {
       }
       // r18: the two generation reads are independent parquet scans —
       // run them concurrently (guide §2.6) instead of as two serial jobs
-      graft.operators.ParJobs.run(spark, "graft clone gens", threads = 2)(Seq(
+      graft.operators.ParJobs.run(spark, "graft clone gens",
+          scala.concurrent.duration.Duration.Inf, threads = 2)(Seq(
           () => gen("clone_pinned",
             Pipeline.resolvePublished(spark, cloneTgt, "orders_clone")),
           () => gen("source_live",

@@ -2,8 +2,9 @@ package graft.config
 
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Declarative pipeline config — the Spark-native analogue of op-etl's
   * config.yaml (/root/reference/config/config.yaml, etl/config.py): one
@@ -385,7 +386,12 @@ object Pipeline {
     * S3-like stores a directory rename is an O(data) copy; manifest
     * publish never moves data — each load writes a NEW immutable version
     * directory and then rewrites one tiny manifest object LAST, so the
-    * commit cost is one small PUT regardless of data size. */
+    * commit cost is one small PUT regardless of data size.
+    *
+    * Each version directory carries a `_GRAFT_ROWS` record of its row
+    * counts, written by [[writeVersion]] before the manifest names the
+    * version; a commit's reconcile sums those records instead of reading
+    * the live versions back (see [[writeVersion]] for the contract). */
   def manifestMode(spark: SparkSession): Boolean =
     spark.conf.get("graft.publish.mode", "rename") match {
       case "manifest" => true
@@ -426,13 +432,95 @@ object Pipeline {
 
   private def readLines(fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): Seq[String] =
-    if (!fs.exists(p)) Seq.empty
-    else {
+    readLinesIfExists(fs, p).getOrElse(Seq.empty)
+
+  /** The file's trimmed non-empty lines, None when it does not exist. */
+  private def readLinesIfExists(fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): Option[Seq[String]] =
+    try {
       val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .map(_.trim).filter(_.nonEmpty).toList
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .map(_.trim).filter(_.nonEmpty).toList)
       finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  private val rowsRecord = "_GRAFT_ROWS"
+
+  /** Write `df` to `dir` (partitioned by `layer_name` when `layered`) and
+    * return the number of rows written, counted by the write's own job
+    * through an [[org.apache.spark.sql.Observation]]: 0 for an empty
+    * write, partitioned or not, with no read of the written files. */
+  private def writeCounted(df: DataFrame, dir: org.apache.hadoop.fs.Path,
+      layered: Boolean): Long = {
+    val ob = org.apache.spark.sql.Observation()
+    val w = df.observe(ob, count(lit(1)).as("rows")).write.mode("overwrite")
+    (if (layered) w.partitionBy("layer_name") else w).parquet(dir.toString)
+    ob.get("rows").asInstanceOf[Long]
+  }
+
+  /** Per-layer row counts of layered data: one grouped aggregation. */
+  private def layerCounts(df: DataFrame): Seq[(String, Long)] =
+    df.groupBy(col("layer_name")).count().collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+
+  /** Write `df` as a new immutable version directory under `base` and
+    * return its name with its row counts, keyed by layer (one `""` key
+    * for an unlayered version).
+    *
+    * `_GRAFT_ROWS` contract: this helper is the only writer of the
+    * record, and every version [[run]] or [[branchPublish]] creates goes
+    * through it. The record is written once, after the data and before
+    * any manifest or branch pointer names the version, so it is
+    * immutable for as long as the version is live. The total comes from
+    * the write itself ([[writeCounted]]); a layered version's per-layer
+    * counts come from one grouped read of the new version. A version
+    * written any other way has no record, and [[versionRows]] counts it
+    * by reading it — the only fallback. Spark readers skip the
+    * `_`-prefixed file, so the record never reaches a scan. */
+  private def writeVersion(fs: org.apache.hadoop.fs.FileSystem,
+      base: org.apache.hadoop.fs.Path, df: DataFrame,
+      layered: Boolean): (String, Seq[(String, Long)]) = {
+    import org.apache.hadoop.fs.Path
+    // pid disambiguates concurrent JVMs; the per-JVM sequence
+    // disambiguates two versions of one target inside one millisecond
+    val verName = s"v_${System.currentTimeMillis()}_" +
+      s"${ProcessHandle.current().pid()}_${verSeq.incrementAndGet()}"
+    val dir = new Path(base, verName)
+    val total = writeCounted(df, dir, layered)
+    val rows =
+      if (!layered) Seq(("", total))
+      else if (total == 0L) Seq.empty
+      else layerCounts(df.sparkSession.read.parquet(dir.toString))
+    writeLines(fs, new Path(dir, rowsRecord),
+      rows.map { case (l, n) => if (l.isEmpty) n.toString else s"$l\t$n" })
+    (verName, rows)
+  }
+
+  /** Row counts of `versions` under `base`, summed per layer: the sum of
+    * their `_GRAFT_ROWS` records, plus a read of the versions that have
+    * none (see [[writeVersion]]) — one read for all of them, or one per
+    * version when layered, since partitioned roots cannot be read as one. */
+  private def versionRows(spark: SparkSession, fs: org.apache.hadoop.fs.FileSystem,
+      base: org.apache.hadoop.fs.Path, versions: Seq[String],
+      layered: Boolean): Seq[(String, Long)] = {
+    import org.apache.hadoop.fs.Path
+    val records = versions.map { v =>
+      val dir = new Path(base, v)
+      dir -> readLinesIfExists(fs, new Path(dir, rowsRecord))
     }
+    val recorded = records.flatMap(_._2).flatten.map { line =>
+      line.split('\t') match {
+        case Array(n)    => ("", n.toLong)
+        case Array(l, n) => (l, n.toLong)
+      }
+    }
+    val unrecorded = records.collect { case (dir, None) => dir.toString }
+    val read =
+      if (unrecorded.isEmpty) Seq.empty
+      else if (layered) unrecorded.flatMap(v => layerCounts(spark.read.parquet(v)))
+      else Seq(("", spark.read.parquet(unrecorded: _*).count()))
+    (recorded ++ read).groupMapReduce(_._1)(_._2)(_ + _).toSeq
+  }
 
   /** Reader-side resolution for manifest-published targets: the full
     * paths of the live version directories of `target/<name>` (empty if
@@ -478,7 +566,8 @@ object Pipeline {
   }
 
   /** Publish a truncate generation ONTO a branch: an ordinary immutable
-    * version write plus a rewrite of the branch pointer only. */
+    * version write ([[writeVersion]], so the version carries its
+    * `_GRAFT_ROWS` record) plus a rewrite of the branch pointer only. */
   def branchPublish(spark: SparkSession, target: String, name: String,
       branch: String, df: DataFrame): String = {
     import org.apache.hadoop.fs.Path
@@ -487,9 +576,7 @@ object Pipeline {
     val bf = branchFile(fs.makeQualified(base), branch)
     val lines = readLines(fs, bf)
     require(lines.nonEmpty, s"no such branch $branch")
-    val verName = s"v_${System.currentTimeMillis()}_" +
-      s"${ProcessHandle.current().pid()}_${verSeq.incrementAndGet()}"
-    df.write.mode("overwrite").parquet(new Path(base, verName).toString)
+    val (verName, _) = writeVersion(fs, base, df, layered = false)
     writeLines(fs, bf, lines.head +: Seq(verName))
     verName
   }
@@ -725,9 +812,18 @@ object Pipeline {
     * Hadoop-FS-backed store, not just the local FS. On object stores
     * without atomic rename — S3 — set `graft.publish.mode=manifest`
     * ([[manifestMode]]): data lands once in an immutable version
-    * directory and the commit is one tiny manifest PUT, no rename. */
+    * directory and the commit is one tiny manifest PUT, no rename.
+    *
+    * Row counts: every load counts its rows during the write itself
+    * ([[writeCounted]]); that count decides the zero-feature skip and is
+    * the unlayered summary row. In manifest mode each version records its
+    * counts in `_GRAFT_ROWS` ([[writeVersion]]) before the manifest names
+    * it, and the append reconcile is the sum of the live versions'
+    * records — earlier versions are read only when they have no record
+    * (written outside [[writeVersion]]). Layered loads count per layer
+    * with one grouped read of the new data. Rename-mode appends still
+    * re-read the whole published target: it keeps no per-append record. */
   def run(spark: SparkSession, cfg0: PipelineCfg): DataFrame = {
-    import spark.implicits._
     import org.apache.hadoop.fs.Path
     // fold the active environment's overlay in first (idempotent; a typo'd
     // environment name fails here, before anything is staged or deleted)
@@ -753,35 +849,18 @@ object Pipeline {
         else stage(spark, src)
       val finalDf = if (cfg.sanitizeNames) sanitize(staged) else staged
       val layered = isLayered(src)
-      // per-layer reconciliation helper for container sources: one metrics
-      // row per DISCOVERED layer (stage_files.py stages each layer as its
-      // own feature class; monitoring counts each separately). The collect
-      // is ≤ |layers| rows — the same size as the reference's per-fc log.
-      def perLayer(df: DataFrame): Seq[(String, Long)] =
-        df.groupBy(col("layer_name")).count().collect()
-          .map(r => (s"${src.name}/${r.getString(0)}", r.getLong(1))).toSeq
+      // container sources report one metrics row per DISCOVERED layer
+      // (stage_files.py stages each layer as its own feature class;
+      // monitoring counts each separately) — ≤ |layers| rows, the same
+      // size as the reference's per-fc log
+      def labelled(rows: Seq[(String, Long)]): Seq[(String, Long)] =
+        if (layered) rows.map { case (l, n) => (s"${src.name}/$l", n) }
+        else rows.map { case (_, n) => (src.name, n) }
       cfg.load match {
         case Some(LoadCfg(target, mode, resolveDatasets)) if cfg.steps.load =>
           val fs = new Path(target).getFileSystem(hconf)
           val dst = resolveDestination(fs, new Path(target), src.name, resolveDatasets)
           val appendMode = mode == "append"
-          def writeTo(p: Path): Unit =
-            if (layered)
-              finalDf.write.mode("overwrite").partitionBy("layer_name").parquet(p.toString)
-            else
-              finalDf.write.mode("overwrite").parquet(p.toString)
-          // a zero-row PARTITIONED write leaves no part files at all (and
-          // an unreadable schema-less dir) — probe the file listing first,
-          // then let parquet row-group metadata answer the count
-          def partFiles(root: Path): Seq[Path] = {
-            val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
-            val it = fs.listFiles(root, true)
-            while (it.hasNext) {
-              val f = it.next()
-              if (f.getPath.getName.startsWith("part-")) buf += f.getPath
-            }
-            buf.toSeq
-          }
           if (manifestMode(spark)) {
             // Manifest-commit publish (the S3-safe mode): the load writes
             // ONCE into a fresh immutable version directory under the
@@ -792,20 +871,12 @@ object Pipeline {
             // versions are GC'd with a one-generation grace (the IVF
             // layout's rule: a reader that resolved the old manifest may
             // still be mid-scan). Readers resolve via [[resolvePublished]].
-            // pid disambiguates concurrent JVMs; the per-JVM sequence
-            // disambiguates two loads of one source inside one millisecond
-            val verName = s"v_${System.currentTimeMillis()}_" +
-              s"${ProcessHandle.current().pid()}_${verSeq.incrementAndGet()}"
-            val verDir = new Path(dst, verName)
-            writeTo(verDir)
-            val staged = partFiles(verDir)
-            val writtenRows =
-              if (staged.isEmpty) 0L else spark.read.parquet(verDir.toString).count()
-            if (writtenRows == 0L) {
+            val (verName, rows) = writeVersion(fs, dst, finalDf, layered)
+            if (rows.forall(_._2 == 0L)) {
               // zero-feature loads are skipped (process.py): drop the
               // version dir, leave the manifest — and any prior data —
               // exactly as it was
-              fs.delete(verDir, true); Seq((src.name, 0L))
+              fs.delete(new Path(dst, verName), true); Seq((src.name, 0L))
             } else {
               val prior = readManifest(fs, dst)
               val live = if (appendMode) prior :+ verName else Seq(verName)
@@ -826,15 +897,13 @@ object Pipeline {
                   if (fs.exists(p)) fs.delete(p, true): Unit
                 }
                 writeLines(fs, prevFile(dst), prior)
+                labelled(rows)
+              } else {
+                // append reconcile covers ALL live versions (prior appends
+                // included): their recorded counts plus the new version's
+                val earlier = versionRows(spark, fs, dst, prior, layered)
+                labelled((earlier ++ rows).groupMapReduce(_._1)(_._2)(_ + _).toSeq)
               }
-              if (appendMode) {
-                // append reconcile counts ALL live versions (prior
-                // appends included), through the manifest like a reader
-                val paths = live.map(v => new Path(dst, v).toString)
-                if (layered) perLayer(spark.read.parquet(paths: _*))
-                else Seq((src.name, spark.read.parquet(paths: _*).count()))
-              } else if (layered) perLayer(spark.read.parquet(verDir.toString))
-              else Seq((src.name, writtenRows))
             }
           } else {
             // Write-once-then-reconcile: the staged subtree is computed
@@ -842,28 +911,23 @@ object Pipeline {
             // the target (`.staging` SUFFIX — a dot/underscore PREFIX would
             // be invisible to Spark's path filter even as a read root, and
             // sanitized source names cannot contain a dot, so the name can
-            // never collide with a real target). The empty probe
-            // (process.py: zero-feature outputs are not written) and the
-            // per-layer reconcile both read the WRITTEN files — no persist,
-            // no second pass over the source. Publish is one directory
-            // rename (overwrite) or a part-file move (append); an empty
-            // result removes the staging dir and leaves NO target behind.
-            // staged NEXT TO the resolved destination (dataset dir or
-            // root), so the publish rename never crosses directories
+            // never collide with a real target). The write counts its own
+            // rows, which decide the empty skip (process.py: zero-feature
+            // outputs are not written); the per-layer reconcile reads the
+            // WRITTEN files — no persist, no second pass over the source.
+            // Publish is one directory rename (overwrite) or a part-file
+            // move (append); an empty result removes the staging dir and
+            // leaves NO target behind. Staged NEXT TO the resolved
+            // destination (dataset dir or root), so the publish rename
+            // never crosses directories.
             val tmp = fs.makeQualified(dst.suffix(".staging"))
             if (fs.exists(tmp)) fs.delete(tmp, true)
-            writeTo(tmp)
-            val staged = partFiles(tmp)
-            val writtenRows =
-              if (staged.isEmpty) 0L else spark.read.parquet(tmp.toString).count()
+            val writtenRows = writeCounted(finalDf, tmp, layered)
             if (writtenRows == 0L) { fs.delete(tmp, true); Seq((src.name, 0L)) }
             else if (!appendMode) {
-              // reconcile from the WRITTEN staging files BEFORE the rename —
-              // identical content, and the scalar row reuses `writtenRows`
-              // instead of re-counting the published copy (one fewer
-              // footer-read job per source)
+              // reconcile from the WRITTEN staging files BEFORE the rename
               val summary =
-                if (layered) perLayer(spark.read.parquet(tmp.toString))
+                if (layered) labelled(layerCounts(spark.read.parquet(tmp.toString)))
                 else Seq((src.name, writtenRows))
               if (fs.exists(dst)) fs.delete(dst, true)
               require(fs.rename(tmp, dst), s"publish failed: $tmp -> $dst")
@@ -874,27 +938,38 @@ object Pipeline {
               // names cannot collide with prior appends. The append
               // reconcile MUST re-read the published target (prior appends
               // count too), unlike the overwrite path above.
-              staged.foreach { f =>
+              val it = fs.listFiles(tmp, true)
+              val parts = Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
+                .filter(_.getName.startsWith("part-")).toList
+              parts.foreach { f =>
                 val rel = f.toString.stripPrefix(tmp.toString).stripPrefix("/")
                 val d = new Path(dst, rel)
                 fs.mkdirs(d.getParent)
                 require(fs.rename(f, d), s"publish failed: $f -> $d")
               }
               fs.delete(tmp, true)
-              if (layered) perLayer(spark.read.parquet(dst.toString))
+              if (layered) labelled(layerCounts(spark.read.parquet(dst.toString)))
               else Seq((src.name, spark.read.parquet(dst.toString).count()))
             }
           }
         case _ =>
           if (layered) {
             // an all-empty container must still be visible to monitoring
-            val layers = perLayer(finalDf)
+            val layers = labelled(layerCounts(finalDf))
             if (layers.isEmpty) Seq((src.name, 0L)) else layers
           } else Seq((src.name, finalDf.count()))
       }
     }
-    (results.map { case (n, c) => (n, c, "ok") } ++
-        skipped.map(s => (s.name, 0L, "skipped")))
-      .toDF("source", "rows_loaded", "status").orderBy(col("source"))
+    // built from Rows against an explicit schema (the tuple encoder's
+    // reflective derivation costs more than the rest of the summary)
+    val rows = results.map { case (n, c) => Row(n, c, "ok") } ++
+      skipped.map(s => Row(s.name, 0L, "skipped"))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), summarySchema)
+      .orderBy(col("source"))
   }
+
+  private val summarySchema = StructType(Seq(
+    StructField("source", StringType),
+    StructField("rows_loaded", LongType, nullable = false),
+    StructField("status", StringType)))
 }

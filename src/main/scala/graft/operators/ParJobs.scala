@@ -1,6 +1,9 @@
 package graft.operators
 
+import java.util.concurrent.ExecutionException
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.concurrent.duration.Duration
+import scala.util.control.NonFatal
 
 /** Run independent Spark actions concurrently on one session — the
   * documented multi-job pattern (guide §2.6: actions are only sequential
@@ -19,27 +22,38 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * completion on the shared session after the caller has thrown. */
 object ParJobs {
 
-  def run[A](spark: SparkSession, desc: String, threads: Int = 8)(
+  /** Run `thunks` concurrently and return their results in order. The
+    * caller waits at most `timeout` (`Duration.Inf` for batch work that
+    * must finish); on timeout, failure or interrupt the group is
+    * cancelled before the error propagates, and an interrupt is
+    * re-asserted on the calling thread. A fatal error in a thunk fails
+    * the call (wrapped in an `ExecutionException`) instead of leaving
+    * the wait to run out. */
+  def run[A](spark: SparkSession, desc: String, timeout: Duration, threads: Int = 8)(
       thunks: Seq[() => A]): Seq[A] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.DurationInt
     val sc = spark.sparkContext
     val group = s"$desc-${java.util.UUID.randomUUID()}"
     val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     val work = Future.sequence(thunks.map(t => Future {
       sc.setJobGroup(group, desc, interruptOnCancel = true)
-      try t() finally sc.clearJobGroup()
+      // a fatal error would kill the pool thread without completing the
+      // future; box it so the wait ends with the failure
+      try t()
+      catch { case e: Throwable if !NonFatal(e) => throw new ExecutionException(e) }
+      finally sc.clearJobGroup()
     }))
-    try Await.result(work, 30.minutes)
+    try Await.result(work, timeout)
     catch {
-      case e: Throwable =>
+      case e @ (NonFatal(_) | _: InterruptedException) =>
         // cancelJobGroupAndFutureJobs is STICKY: a sibling thunk that was
         // mid-planning (no active job yet) and submits after the failure
         // is cancelled too — plain cancelJobGroup only kills jobs already
         // running, leaving that race open
-        try sc.cancelJobGroupAndFutureJobs(group) catch { case _: Throwable => () }
+        try sc.cancelJobGroupAndFutureJobs(group) catch { case NonFatal(_) => () }
         pool.shutdownNow()
+        if (e.isInstanceOf[InterruptedException]) Thread.currentThread().interrupt()
         throw e
     } finally pool.shutdown()
   }
@@ -47,6 +61,6 @@ object ParJobs {
   /** Materialize independent frames concurrently (each eagerly
     * localCheckpointed so the work happens inside this call). */
   def materialize(spark: SparkSession, desc: String,
-      mk: Seq[() => DataFrame], threads: Int = 8): Seq[DataFrame] =
-    run(spark, desc, threads)(mk.map(m => () => m().localCheckpoint(true)))
+      mk: Seq[() => DataFrame], timeout: Duration, threads: Int = 8): Seq[DataFrame] =
+    run(spark, desc, timeout, threads)(mk.map(m => () => m().localCheckpoint(true)))
 }

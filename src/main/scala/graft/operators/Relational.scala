@@ -2002,7 +2002,7 @@ object Relational {
       branches.map { case (rows, _, _) => () =>
         rows.groupBy(col("a"), col("b"))
           .agg(count(lit(1)).cast("long").as("o"))
-      }, threads = 3)
+      }, scala.concurrent.duration.Duration.Inf, threads = 3)
     cells.zip(branches).map { case (c, (_, na, nb)) => cramersFromCells(c, na, nb) }
       .reduce(_.unionByName(_))
       .orderBy(col("col_a"), col("col_b"))

@@ -337,12 +337,14 @@ object Scorecard {
     * materialization, the per-gate frame thunks, and the per-gate digest
     * collects. Body hoisted to [[ParJobs]] (r18) so the multi-branch
     * batch entries share the same job-group failure containment. */
+  private val scorecardTimeout = scala.concurrent.duration.Duration(30, "minutes")
+
   private def parRun[A](spark: SparkSession)(thunks: Seq[() => A]): Seq[A] =
-    ParJobs.run(spark, "graft stream scorecard")(thunks)
+    ParJobs.run(spark, "graft stream scorecard", scorecardTimeout)(thunks)
 
   private def parMaterialize(spark: SparkSession,
       mk: Seq[() => DataFrame]): Seq[DataFrame] =
-    ParJobs.materialize(spark, "graft stream scorecard", mk)
+    ParJobs.materialize(spark, "graft stream scorecard", mk, scorecardTimeout)
 
   private def buildFrames(spark: SparkSession,
       dir: String): Seq[(String, DataFrame)] = {

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.util.control.NonFatal
 
 /** Input/output rows for the stateful sessionizer (G3). */
 final case class SessionEvent(user_id: Long, sec: Long, value: Double)
@@ -206,7 +207,7 @@ object EventStreams {
     else fs.listStatus(p)
       .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .sorted.mkString("|")
-  } catch { case _: Throwable => "" }
+  } catch { case NonFatal(_) => "" }
 
   private[graft] def foldState(part: DataFrame, stateDir: String,
       keys: Seq[String]): DataFrame = {

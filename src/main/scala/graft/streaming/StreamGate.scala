@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
+import scala.util.control.NonFatal
 
 /** Oracle-gate entry points for the G-family (SURVEY §2 G): each runs a
   * REAL Structured Streaming query to completion (file source →
@@ -83,7 +84,7 @@ object StreamGate {
     val prev = spark.conf.get(key)
     val p = new org.apache.hadoop.fs.Path(base)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = try fs.getContentSummary(p).getLength catch { case _: Throwable => 0L }
+    val bytes = try fs.getContentSummary(p).getLength catch { case NonFatal(_) => 0L }
     val per = 16L << 20
     // env override wins over the per-gate floor; a malformed value falls
     // back rather than throwing mid-suite
@@ -104,7 +105,7 @@ object StreamGate {
     try body finally {
       spark.conf.set(key, prev)
       try org.apache.spark.sql.GraftShims.unloadStateStores()
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
   }
 

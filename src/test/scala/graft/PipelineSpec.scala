@@ -831,4 +831,160 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
       }
     }
   }
+
+  /** Run `body` with `graft.publish.mode` set, restoring the prior value. */
+  private def withPublishMode[A](mode: String)(body: => A): A = {
+    val prior = spark.conf.getOption("graft.publish.mode")
+    spark.conf.set("graft.publish.mode", mode)
+    try body
+    finally prior match {
+      case Some(v) => spark.conf.set("graft.publish.mode", v)
+      case None    => spark.conf.unset("graft.publish.mode")
+    }
+  }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def jobsOf[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.GraftTestShims.flushListeners(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.GraftTestShims.flushListeners(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def summaryOf(cfg: PipelineCfg): Map[String, Long] =
+    Pipeline.run(spark, cfg).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
+  /** What a reader of `tgt/name` sees, counted per summary label (each
+    * partitioned version root is read on its own). */
+  private def readBack(tgt: String, name: String, layered: Boolean): Map[String, Long] = {
+    import org.apache.spark.sql.functions.col
+    val roots =
+      if (Pipeline.manifestMode(spark)) Pipeline.resolvePublished(spark, tgt, name)
+      else Seq(s"$tgt/${Pipeline.safeNameString(name)}")
+    if (!layered) Map(name -> spark.read.parquet(roots: _*).count())
+    else roots.flatMap(r => spark.read.parquet(r).groupBy(col("layer_name")).count().collect())
+      .groupMapReduce(r => s"$name/${r.getString(0)}")(_.getLong(1))(_ + _)
+  }
+
+  private def ordersSlice(name: String, tgt: String, mode: String, where: String) =
+    PipelineCfg(
+      sources = Seq(SourceCfg(name = name, path = s"$sfDir/orders.parquet", where = Some(where))),
+      load = Some(LoadCfg(tgt, mode)))
+
+  test("manifest commits run a fixed number of Spark jobs: the 5th append as many as the 1st") {
+    withPublishMode("manifest") {
+      val tgt = java.nio.file.Files.createTempDirectory("commit_jobs").toString
+      val app = ordersSlice("o", tgt, "append", "o_orderstatus = 'F'")
+      val appendJobs = (1 to 5).map(_ => jobsOf(Pipeline.run(spark, app).collect())._2)
+      assert(Pipeline.resolvePublished(spark, tgt, "o").size == 5)
+      // source schema inference plus the write: no read of any version
+      assert(appendJobs.head == 2 && appendJobs.last == appendJobs.head,
+        s"jobs per append commit: $appendJobs")
+      val truncJobs = jobsOf(Pipeline.run(spark, app.copy(
+        load = Some(LoadCfg(tgt, "truncate")))).collect())._2
+      assert(truncJobs == 2, s"jobs per truncate commit: $truncJobs")
+    }
+  }
+
+  test("summary rows equal a read-back count in both publish modes: truncate, append, layered, zero-row") {
+    val wire = s"$target/reconcile_wire"
+    graft.sources.Ingest.buildArchiveWire(spark, sfDir)
+      .write.mode("overwrite").parquet(wire)
+    for (mode <- Seq("rename", "manifest")) withPublishMode(mode) {
+      val tgt = java.nio.file.Files.createTempDirectory(s"reconcile_$mode").toString
+      def flat(load: String, where: String) = ordersSlice("o", tgt, load, where)
+      val arc = PipelineCfg(
+        sources = Seq(SourceCfg(name = "arc", path = wire, format = "archive")),
+        load = Some(LoadCfg(tgt)))
+      def check(cfg: PipelineCfg, name: String, layered: Boolean): Map[String, Long] = {
+        val out = summaryOf(cfg)
+        assert(out == readBack(tgt, name, layered), s"$mode $name: $out")
+        out
+      }
+      val f = check(flat("truncate", "o_orderstatus = 'F'"), "o", layered = false)
+      val fo = check(flat("append", "o_orderstatus = 'O'"), "o", layered = false)
+      assert(fo("o") > f("o"))
+      check(flat("append", "o_orderstatus = 'P'"), "o", layered = false)
+      check(arc, "arc", layered = true)
+      check(arc.copy(load = Some(LoadCfg(tgt, "append"))), "arc", layered = true)
+      // zero-row loads report 0 and leave the manifest and the data as they were
+      val live = Pipeline.resolvePublished(spark, tgt, "o")
+      val before = readBack(tgt, "o", layered = false)
+      for (load <- Seq("truncate", "append")) {
+        assert(summaryOf(flat(load, "o_orderkey < 0")) == Map("o" -> 0L), s"$mode $load")
+        assert(Pipeline.resolvePublished(spark, tgt, "o") == live)
+        assert(readBack(tgt, "o", layered = false) == before)
+      }
+      if (mode == "manifest") {
+        // every version records its count before the manifest names it
+        val recorded = live.map(v => new java.io.File(new java.net.URI(v).getPath, "_GRAFT_ROWS"))
+        assert(recorded.forall(_.exists), live.toString)
+        assert(recorded.map(r => java.nio.file.Files.readString(r.toPath).trim.toLong).sum ==
+          before("o"))
+      }
+    }
+  }
+
+  test("append reconcile equals a read-back count after restore, branch merge, clone, and over an unrecorded version") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.col
+    withPublishMode("manifest") {
+      val root = java.nio.file.Files.createTempDirectory("reconcile_history").toString
+      def appendP(tgt: String, name: String): Unit = {
+        val out = summaryOf(ordersSlice(name, tgt, "append", "o_orderstatus = 'P'"))
+        assert(out == readBack(tgt, name, layered = false), s"$tgt/$name: $out")
+      }
+      // restore: live swings back to the 'F' generation, then an append
+      val restored = s"$root/restored"
+      summaryOf(ordersSlice("o", restored, "truncate", "o_orderstatus = 'F'"))
+      summaryOf(ordersSlice("o", restored, "truncate", "o_orderstatus = 'O'"))
+      Pipeline.restore(spark, restored, "o")
+      appendP(restored, "o")
+      // branch merge: main fast-forwards to a branchPublish version
+      val merged = s"$root/merged"
+      summaryOf(ordersSlice("o", merged, "truncate", "o_orderstatus = 'F'"))
+      Pipeline.branchCreate(spark, merged, "o", "b")
+      Pipeline.branchPublish(spark, merged, "o", "b",
+        spark.read.parquet(s"$sfDir/orders.parquet").filter(col("o_orderstatus") === "O"))
+      assert(Pipeline.branchMerge(spark, merged, "o", "b") == "fast_forward")
+      appendP(merged, "o")
+      // clone: the clone's manifest names the source's versions absolutely
+      val src = s"$root/clone_src"
+      summaryOf(ordersSlice("o", src, "truncate", "o_orderstatus = 'F'"))
+      Pipeline.clonePublish(spark, src, "o", s"$root/clone_dst", "c")
+      appendP(s"$root/clone_dst", "c")
+      // a live version written outside the version helper has no record
+      val bare = s"$root/bare"
+      val base = new Path(bare, "o")
+      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      spark.read.parquet(s"$sfDir/orders.parquet").filter(col("o_orderstatus") === "F")
+        .write.parquet(new Path(base, "v_1_0_0").toString)
+      Pipeline.writeManifest(fs, fs.makeQualified(base), Seq("v_1_0_0"))
+      appendP(bare, "o")
+      appendP(bare, "o")
+      assert(!fs.exists(new Path(base, "v_1_0_0/_GRAFT_ROWS")))
+      // two unrecorded layered versions: partitioned roots are read one by one
+      val wire = s"$root/arc_wire"
+      graft.sources.Ingest.buildArchiveWire(spark, sfDir).write.parquet(wire)
+      val arc = SourceCfg(name = "arc", path = wire, format = "archive")
+      val arcBase = new Path(s"$root/bare_arc", "arc")
+      Seq("v_1_0_0", "v_2_0_0").foreach { v =>
+        Pipeline.stage(spark, arc).write.partitionBy("layer_name")
+          .parquet(new Path(arcBase, v).toString)
+      }
+      Pipeline.writeManifest(fs, fs.makeQualified(arcBase), Seq("v_1_0_0", "v_2_0_0"))
+      val out = summaryOf(PipelineCfg(sources = Seq(arc),
+        load = Some(LoadCfg(s"$root/bare_arc", "append"))))
+      assert(out == readBack(s"$root/bare_arc", "arc", layered = true), out.toString)
+    }
+  }
 }
