@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import scala.util.control.NonFatal
 
 /** Input/output rows for the stateful sessionizer (G3). */
@@ -55,8 +55,12 @@ object EventStreams {
     *   - after promote, before backup drop → current generation readable.
     * The old delete-then-rename shape had a window where NO state existed —
     * a crash there silently reset the accumulated counts/moments and broke
-    * the 'equals the batch pass over the prefix' guarantee on recovery. */
-  private[graft] def publishState(df: DataFrame, dir: String): Unit = {
+    * the 'equals the batch pass over the prefix' guarantee on recovery.
+    * `marker`, when given, names an empty `_`-prefixed file created in
+    * `.next` before the promote, so it travels with the generation
+    * (parquet readers skip `_` files). */
+  private[graft] def publishState(df: DataFrame, dir: String,
+      marker: Option[String] = None): Unit = {
     val spark = df.sparkSession
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -64,6 +68,7 @@ object EventStreams {
     val next = new org.apache.hadoop.fs.Path(dir + ".next")
     val prev = new org.apache.hadoop.fs.Path(dir + ".prev")
     df.write.mode("overwrite").parquet(next.toString)
+    marker.foreach(m => fs.create(new org.apache.hadoop.fs.Path(next, m), true).close())
     if (fs.exists(prev)) fs.delete(prev, true)
     if (fs.exists(cur)) require(fs.rename(cur, prev), s"state set-aside failed: $cur")
     require(fs.rename(next, cur), s"state publish failed: $next -> $cur")
@@ -71,22 +76,26 @@ object EventStreams {
     (): Unit
   }
 
-  /** Recover the newest COMPLETE state generation (see [[publishState]]):
-    * current if present, else a fully-written `.next` (its _SUCCESS marker
-    * proves the write finished before the crash), else the `.prev` backup. */
-  private[graft] def readState(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Option[DataFrame] = {
+  /** The newest COMPLETE state generation (see [[publishState]]): current
+    * if present, else a fully-written `.next` (its _SUCCESS marker proves
+    * the write finished before the crash), else the `.prev` backup. */
+  private def generation(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Option[org.apache.hadoop.fs.Path] = {
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cur = new org.apache.hadoop.fs.Path(dir)
     val next = new org.apache.hadoop.fs.Path(dir + ".next")
     val prev = new org.apache.hadoop.fs.Path(dir + ".prev")
-    if (fs.exists(cur)) Some(spark.read.parquet(dir))
-    else if (fs.exists(new org.apache.hadoop.fs.Path(next, "_SUCCESS")))
-      Some(spark.read.parquet(next.toString))
-    else if (fs.exists(prev)) Some(spark.read.parquet(prev.toString))
+    if (fs.exists(cur)) Some(cur)
+    else if (fs.exists(new org.apache.hadoop.fs.Path(next, "_SUCCESS"))) Some(next)
+    else if (fs.exists(prev)) Some(prev)
     else None
   }
+
+  /** Recover the newest complete state generation (see [[generation]]). */
+  private[graft] def readState(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Option[DataFrame] =
+    generation(spark, dir).map(g => spark.read.parquet(g.toString))
 
   /** Append-only ledger for corpus-scale stream state (G15 seen-chunk
     * hashes, G17 first-seen grams). The r12 shape republished the FULL
@@ -137,15 +146,7 @@ object EventStreams {
     val deltas = ledgerDeltaDirs(spark, root)
     def bytes(p: org.apache.hadoop.fs.Path): Long =
       fs.getContentSummary(p).getLength
-    val baseBytes = {
-      val cur = new org.apache.hadoop.fs.Path(root)
-      val next = new org.apache.hadoop.fs.Path(root + ".next")
-      val prev = new org.apache.hadoop.fs.Path(root + ".prev")
-      if (fs.exists(cur)) bytes(cur)
-      else if (fs.exists(new org.apache.hadoop.fs.Path(next, "_SUCCESS"))) bytes(next)
-      else if (fs.exists(prev)) bytes(prev)
-      else 0L
-    }
+    val baseBytes = generation(spark, root).map(bytes).getOrElse(0L)
     val sized = deltas.map(d => (d, bytes(d)))
     if (deltas.nonEmpty && sized.map(_._2).sum >= math.max(baseBytes, 1L)) {
       // major: the deltas are worth a base rewrite (base at least doubles)
@@ -164,38 +165,28 @@ object EventStreams {
     }
   }
 
-  /** Shared CELL-FOLD state store for the cumulative foreachBatch gates
-    * (r13-verdict stretch, r14): every "accumulate additive partials,
-    * re-emit the report" gate routes its state turn through this one
-    * helper — read the prior generation, union the batch's partials,
-    * re-aggregate per key (every non-key column summed back to its own
-    * dtype — partials are additive by each gate's construction), publish
-    * crash-safe, return the total for the report assembly. One shared
-    * shape means no future gate can hand-roll a state fold that grows
-    * beyond its key grain or skips the atomic-rename publish: the fold's
-    * state size IS the key domain's size, which each gate's scaladoc
-    * argues is value-bounded. (The UNBOUNDED ledgers — G15/G17 corpus
-    * hash sets — use [[appendLedger]] instead: their state is
-    * corpus-sized, so the full-rewrite this helper performs per trigger
-    * would be the r12 quadratic-ingest bug. This helper is for
-    * value-bounded cell/moment grains only.) */
-  /** (r18) Process-local fold cache: the prior generation a trigger
-    * needs is exactly the `total` the PREVIOUS trigger checkpointed and
-    * published — re-decoding it from the just-written parquet was one
-    * read job per trigger for every fold gate. The cache hands the
-    * block-manager copy back instead, VALIDATED against the on-disk
-    * generation (file name/length/mtime stamp of the published dir) and
-    * against the owning session, so any out-of-band change — a fresh
-    * gate run deleting the root, a crash-recovery generation, another
-    * process's publish, a new session in one JVM — falls back to the
-    * parquet read. Crash-safety is untouched: every trigger still
-    * publishes via the atomic-rename protocol, and recovery always
-    * reads the disk (the cache is a hot-path shortcut, never the record
-    * of truth). This is the same measurement that refuted the r17
-    * "drop the per-trigger checkpoint" experiment, applied in the
-    * winning direction: block-manager cells beat parquet re-decodes. */
-  private val foldCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, DataFrame)]()
+  /** Process-local cache of each fold store's last published total: the
+    * prior generation a trigger needs is the total the previous trigger
+    * checkpointed, so the block-manager copy saves one parquet read job
+    * per trigger. A hit must match the on-disk generation's file stamp
+    * and the owning session, so any out-of-band change falls back to the
+    * parquet read; the disk stays the record of truth. [[releaseFolds]]
+    * drops a finished gate's entries. */
+  private final case class Fold(stamp: String, total: DataFrame, batchId: Long)
+  private val foldCache = new java.util.concurrent.ConcurrentHashMap[String, Fold]()
+
+  /** Drop the fold-cache entries of every store under `root`, unpinning
+    * their checkpointed totals. */
+  private[graft] def releaseFolds(root: String): Unit = {
+    foldCache.keySet.removeIf(k => k == root || k.startsWith(root + "/"))
+    (): Unit
+  }
+
+  /** Stores currently held by the fold cache. */
+  private[graft] def foldCacheKeys: Set[String] = {
+    import scala.jdk.CollectionConverters._
+    foldCache.keySet.asScala.toSet
+  }
 
   /** Sorted file-level stamp of a published state dir ("" = unreadable
     * or absent, which never validates a cache hit). */
@@ -209,26 +200,92 @@ object EventStreams {
       .sorted.mkString("|")
   } catch { case NonFatal(_) => "" }
 
+  /** Prefix of the marker naming the last batch folded into a generation. */
+  private val FoldedPrefix = "_folded_"
+
+  /** Last batch id whose partials the generation at `gen` holds (-1 = none). */
+  private def foldedThrough(spark: org.apache.spark.sql.SparkSession,
+      gen: org.apache.hadoop.fs.Path): Long =
+    gen.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(gen)
+      .map(_.getPath.getName).filter(_.startsWith(FoldedPrefix))
+      .flatMap(_.stripPrefix(FoldedPrefix).toLongOption).foldLeft(-1L)(math.max)
+
+  /** Shared CELL-FOLD state store for the cumulative gates: read the
+    * prior generation, union the batch's partials, re-aggregate per key
+    * (every non-key column summed back to its own dtype — partials are
+    * additive by each gate's construction), publish crash-safe
+    * ([[publishState]]), and return the total for the report assembly.
+    * The state size IS the key domain's size, which each gate's scaladoc
+    * argues is value-bounded; the corpus-sized ledgers (G15/G17) use
+    * [[appendLedger]] instead, since this per-trigger full rewrite would
+    * make their ingest quadratic.
+    *
+    * Given the micro-batch's `batchId` (≥ 0) the fold is replay-safe:
+    * the published generation carries a `_folded_<batchId>` marker, and
+    * a batch at or below the marker's id — one the engine replays after
+    * a crash between this publish and its checkpoint commit — returns
+    * the stored total without folding it again. `batchId = -1` folds
+    * unconditionally and writes no marker. */
   private[graft] def foldState(part: DataFrame, stateDir: String,
-      keys: Seq[String]): DataFrame = {
+      keys: Seq[String], batchId: Long = -1L): DataFrame = {
     val spark = part.sparkSession
-    val vals = part.schema.filterNot(f => keys.contains(f.name))
-    val prior = {
-      val c = foldCache.get(stateDir)
+    val cached = Option(foldCache.get(stateDir)).filter { c =>
       val st = stateStamp(spark, stateDir)
-      if (c != null && st.nonEmpty && c._1 == st && (c._2.sparkSession eq spark))
-        c._2
-      else readState(spark, stateDir).getOrElse(part.limit(0))
+      st.nonEmpty && c.stamp == st && (c.total.sparkSession eq spark)
     }
-    val aggs = vals.map(f => sum(col(f.name)).cast(f.dataType).as(f.name))
-    val total = prior.unionByName(part)
-      .groupBy(keys.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .localCheckpoint(true)
-    publishState(total, stateDir)
-    foldCache.put(stateDir, (stateStamp(spark, stateDir), total))
-    total
+    val (prior, folded) = cached.map(c => (c.total, c.batchId)).getOrElse(
+      generation(spark, stateDir) match {
+        case Some(g) => (spark.read.parquet(g.toString), foldedThrough(spark, g))
+        case None => (part.limit(0), -1L)
+      })
+    if (batchId >= 0 && batchId <= folded) prior
+    else {
+      val aggs = part.schema.filterNot(f => keys.contains(f.name))
+        .map(f => sum(col(f.name)).cast(f.dataType).as(f.name))
+      val total = prior.unionByName(part)
+        .groupBy(keys.map(col): _*)
+        .agg(aggs.head, aggs.tail: _*)
+        .localCheckpoint(true)
+      publishState(total, stateDir, if (batchId >= 0) Some(FoldedPrefix + batchId) else None)
+      foldCache.put(stateDir, Fold(stateStamp(spark, stateDir), total, batchId))
+      total
+    }
   }
+
+  /** The cumulative fold gate: each micro-batch of `in` collapses to
+    * additive `partials`, which fold per `keys` into the [[foldState]]
+    * store `<stateDir>/<store>`; `report` assembles the folded total into
+    * `<stateDir>/report`, overwritten every trigger, so the report equals
+    * the batch pass over every row seen so far. The checkpoint lives at
+    * `<stateDir>/_checkpoint`: a restart on the same `stateDir` resumes
+    * after the last committed batch instead of re-reading its input, and
+    * the fold's batch-id marker makes a replayed batch fold once. */
+  private def foldGate(in: DataFrame, stateDir: String, store: String, keys: Seq[String])(
+      partials: DataFrame => DataFrame)(report: DataFrame => DataFrame): StreamingQuery =
+    in.writeStream.outputMode("append")
+      .option("checkpointLocation", s"$stateDir/_checkpoint")
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        report(foldState(partials(batch.toDF()), s"$stateDir/$store", keys, batchId))
+          .write.mode("overwrite").parquet(s"$stateDir/report")
+      }
+      .start()
+
+  /** Per-(source, day) integer (Σcents as s, n) moments of a
+    * (source, day, cents) batch. */
+  private def dayMoments(batch: DataFrame): DataFrame =
+    batch.select(col("source"), col("day").cast("long"), col("cents").cast("long"))
+      .groupBy(col("source"), col("day"))
+      .agg(sum(col("cents")).as("s"), count(lit(1)).as("n"))
+
+  /** Per-(source, cents) (positives as np, rows as cnt) cells of a
+    * (source, cents, pos) batch. */
+  private def labeledCells(batch: DataFrame): DataFrame =
+    batch.groupBy(col("source"), col("cents").cast("long").as("cents"))
+      .agg(sum(col("pos")).cast("long").as("np"), count(lit(1)).cast("long").as("cnt"))
+
+  /** The daily metric `md = s div n` from folded [[dayMoments]]. */
+  private def dayMeans(total: DataFrame): DataFrame =
+    total.select(col("source"), col("day"), expr("s div n").as("md"))
 
   /** Complete (_SUCCESS-marked) delta dirs of an append-only ledger. */
   private[graft] def ledgerDeltaDirs(spark: org.apache.spark.sql.SparkSession,
@@ -371,21 +428,12 @@ object EventStreams {
     * unbounded-history capability; this is the bounded-window D19
     * semantics run continuously. */
   def decayLedgerStream(events: DataFrame, stateDir: String,
-      windowDays: Int = 7): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val part = batch0.toDF()
-          .withColumn("day", expr("sec div 86400").cast("long"))
-          .groupBy(col("event_type").as("source"), col("day"))
-          .agg(sum(col("value")).as("duration"))
-        val ledger = foldState(part, stateDir + "/dailies", Seq("source", "day"))
-        graft.operators.LoadOps.decayAvgOver(ledger, windowDays)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+      windowDays: Int = 7): StreamingQuery =
+    foldGate(events, stateDir, "dailies", Seq("source", "day")) {
+      _.withColumn("day", expr("sec div 86400").cast("long"))
+        .groupBy(col("event_type").as("source"), col("day"))
+        .agg(sum(col("value")).as("duration"))
+    }(graft.operators.LoadOps.decayAvgOver(_, windowDays))
 
   /** G26: D47's hour-of-day chi-square drift as an always-on monitor —
     * each micro-batch of (event_type, sec) telemetry collapses directly
@@ -413,25 +461,16 @@ object EventStreams {
     * Telemetry from sources absent from `baseline` is dropped — an
     * unconfigured source has no reference era to test against. */
   def chi2LedgerStream(events: DataFrame, stateDir: String,
-      baseline: DataFrame): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val part = batch0.toDF()
-          .join(broadcast(baseline), Seq("event_type"))
-          .groupBy(col("event_type"),
-            expr("(sec div 3600) % 24").cast("long").as("hour"))
-          .agg(sum(when(col("sec") <= col("ref_end_sec"), 1L).otherwise(0L))
-              .cast("long").as("o_r"),
-            sum(when(col("sec") > col("ref_end_sec"), 1L).otherwise(0L))
-              .cast("long").as("o_c"))
-        val ledger = foldState(part, stateDir + "/cells", Seq("event_type", "hour"))
-        graft.operators.LoadOps.chi2FromHourCells(ledger)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+      baseline: DataFrame): StreamingQuery =
+    foldGate(events, stateDir, "cells", Seq("event_type", "hour")) {
+      _.join(broadcast(baseline), Seq("event_type"))
+        .groupBy(col("event_type"),
+          expr("(sec div 3600) % 24").cast("long").as("hour"))
+        .agg(sum(when(col("sec") <= col("ref_end_sec"), 1L).otherwise(0L))
+            .cast("long").as("o_r"),
+          sum(when(col("sec") > col("ref_end_sec"), 1L).otherwise(0L))
+            .cast("long").as("o_c"))
+    }(graft.operators.LoadOps.chi2FromHourCells)
 
   /** G27: D48's change-point locator as an always-on monitor — each
     * micro-batch of (event_type, sec, value) telemetry collapses to
@@ -446,27 +485,15 @@ object EventStreams {
     * continuously-updated "when did this source move" answer a triage
     * dashboard reads. */
   def changepointLedgerStream(events: DataFrame, stateDir: String,
-      bar: Double = graft.operators.LoadOps.ChangepointBar)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val part = batch0.toDF()
-          .select(col("event_type").as("source"),
-            expr("sec div 86400").cast("long").as("day"),
-            expr("cast(round(value * 100) as long)").as("cents"))
-          .groupBy(col("source"), col("day"))
-          .agg(count(lit(1)).cast("long").as("n"),
-            sum(col("cents")).cast("long").as("s"))
-        val ledger = foldState(part, stateDir + "/dailies", Seq("source", "day"))
-        graft.operators.LoadOps.changepointOver(
-          ledger.select(col("source"), col("day"),
-            expr("s div n").as("md")), bar)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+      bar: Double = graft.operators.LoadOps.ChangepointBar): StreamingQuery =
+    foldGate(events, stateDir, "dailies", Seq("source", "day")) {
+      _.select(col("event_type").as("source"),
+          expr("sec div 86400").cast("long").as("day"),
+          expr("cast(round(value * 100) as long)").as("cents"))
+        .groupBy(col("source"), col("day"))
+        .agg(count(lit(1)).cast("long").as("n"),
+          sum(col("cents")).cast("long").as("s"))
+    }(ledger => graft.operators.LoadOps.changepointOver(dayMeans(ledger), bar))
 
   /** G9: streaming absence detection — the capability NO batch pass has:
     * an alert that fires with ZERO new data from the silent source. The
@@ -709,21 +736,12 @@ object EventStreams {
     * columns that used to determine each other (V≈1) decoupling means
     * an upstream join or mapping broke. State is O(r×c) forever. */
   def cramersStream(rows: DataFrame, stateDir: String,
-      nameA: String, nameB: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = batch0.toDF().select(col("a"), col("b"))
-          .groupBy(col("a"), col("b"))
-          .agg(count(lit(1)).cast("long").as("o"))
-        val cells = foldState(fresh, stateDir + "/cells", Seq("a", "b"))
-        graft.operators.Relational.cramersFromCells(cells, nameA, nameB)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+      nameA: String, nameB: String): StreamingQuery =
+    foldGate(rows, stateDir, "cells", Seq("a", "b")) {
+      _.select(col("a"), col("b"))
+        .groupBy(col("a"), col("b"))
+        .agg(count(lit(1)).cast("long").as("o"))
+    }(graft.operators.Relational.cramersFromCells(_, nameA, nameB))
 
   /** G31: STREAMING winsorized/trimmed means — E58 as a continuous
     * robust-location monitor: the (flag, v) value cells accumulate in
@@ -733,21 +751,12 @@ object EventStreams {
     * accumulated cells — so the report equals the batch pass over the
     * prefix bit-for-bit after every trigger. State is value-bounded
     * (distinct cents per flag), never row-proportional. */
-  def winsorizedStream(rows: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = batch0.toDF().select(col("flag"), col("v").cast("long"))
-          .groupBy(col("flag"), col("v"))
-          .agg(count(lit(1)).cast("long").as("cnt"))
-        val cells = foldState(fresh, stateDir + "/cells", Seq("flag", "v"))
-        graft.operators.Relational.winsorizedFromCells(cells)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+  def winsorizedStream(rows: DataFrame, stateDir: String): StreamingQuery =
+    foldGate(rows, stateDir, "cells", Seq("flag", "v")) {
+      _.select(col("flag"), col("v").cast("long"))
+        .groupBy(col("flag"), col("v"))
+        .agg(count(lit(1)).cast("long").as("cnt"))
+    }(graft.operators.Relational.winsorizedFromCells)
 
   /** G21: STREAMING CUSUM — D40 as the always-on changepoint monitor:
     * each micro-batch of (source, day, md) dailies folds into a
@@ -763,20 +772,10 @@ object EventStreams {
     * days each trigger, exactly as the batch op would. */
   def cusumStream(daily: DataFrame, stateDir: String,
       kCents: Long = graft.operators.LoadOps.CusumKCents,
-      hCents: Long = graft.operators.LoadOps.CusumHCents)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    daily.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val batch = batch0.toDF()
-          .select(col("source"), col("day").cast("long"), col("md").cast("long"))
-        val total = foldState(batch, stateDir + "/dailies", Seq("source", "day"))
-        graft.operators.LoadOps.cusumOver(total, kCents, hCents)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+      hCents: Long = graft.operators.LoadOps.CusumHCents): StreamingQuery =
+    foldGate(daily, stateDir, "dailies", Seq("source", "day")) {
+      _.select(col("source"), col("day").cast("long"), col("md").cast("long"))
+    }(graft.operators.LoadOps.cusumOver(_, kCents, hCents))
 
   /** G33: STREAMING Page–Hinkley — D58 as the always-on adaptive-mean
     * drift pager: per-(source, day) dailies fold into the shared
@@ -791,19 +790,10 @@ object EventStreams {
     * horizon to configure. */
   def pageHinkleyStream(daily: DataFrame, stateDir: String,
       deltaCents: Long = graft.operators.LoadOps.PhDeltaCents,
-      lambdaCents: Long = graft.operators.LoadOps.PhLambdaCents)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    daily.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val batch = batch0.toDF()
-          .select(col("source"), col("day").cast("long"), col("md").cast("long"))
-        val total = foldState(batch, stateDir + "/dailies", Seq("source", "day"))
-        graft.operators.LoadOps.pageHinkleyOver(total, deltaCents, lambdaCents)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+      lambdaCents: Long = graft.operators.LoadOps.PhLambdaCents): StreamingQuery =
+    foldGate(daily, stateDir, "dailies", Seq("source", "day")) {
+      _.select(col("source"), col("day").cast("long"), col("md").cast("long"))
+    }(graft.operators.LoadOps.pageHinkleyOver(_, deltaCents, lambdaCents))
 
   /** G34: STREAMING PSI — D61 as an always-on score-stability pager:
     * per-(source, day, cents) support cells fold through the shared
@@ -815,22 +805,12 @@ object EventStreams {
     * seen so far, so the report equals D61's batch pass over the
     * prefix bit-for-bit after EVERY trigger (integer cells in, one
     * order-pinned float fold out — no drift to accumulate). */
-  def psiStream(cells: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    cells.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val batch = batch0.toDF()
-          .groupBy(col("source"), col("day").cast("long").as("day"),
-            col("cents").cast("long").as("cents"))
-          .agg(count(lit(1)).cast("long").as("cnt"))
-        val total = foldState(batch, stateDir + "/cells",
-          Seq("source", "day", "cents"))
-        graft.operators.LoadOps.psiCells(total)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+  def psiStream(cells: DataFrame, stateDir: String): StreamingQuery =
+    foldGate(cells, stateDir, "cells", Seq("source", "day", "cents")) {
+      _.groupBy(col("source"), col("day").cast("long").as("day"),
+          col("cents").cast("long").as("cents"))
+        .agg(count(lit(1)).cast("long").as("cnt"))
+    }(graft.operators.LoadOps.psiCells)
 
   /** G35: STREAMING AUC — E63 as an always-on online classifier-eval:
     * per-(source, cents) cells carrying (positives, total) fold through
@@ -840,22 +820,9 @@ object EventStreams {
     * .aucCells]] midrank assembly. Integer cells in, one fixed-shape
     * division out — the report equals E63's batch pass over the prefix
     * bit-for-bit after EVERY trigger. */
-  def aucStream(labeled: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    labeled.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val batch = batch0.toDF()
-          .groupBy(col("source"), col("cents").cast("long").as("cents"))
-          .agg(sum(col("pos")).cast("long").as("np"),
-            count(lit(1)).cast("long").as("cnt"))
-        val total = foldState(batch, stateDir + "/cells",
-          Seq("source", "cents"))
-        graft.operators.Relational.aucCells(total)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+  def aucStream(labeled: DataFrame, stateDir: String): StreamingQuery =
+    foldGate(labeled, stateDir, "cells", Seq("source", "cents"))(labeledCells)(
+      graft.operators.Relational.aucCells)
 
   /** G36: STREAMING MANN–KENDALL — D60 as an always-on monotone-trend
     * pager: per-(source, day) exact integer (Σcents, n) moments fold
@@ -865,24 +832,15 @@ object EventStreams {
     * the significance inequality are all exact integers, so the report
     * equals D60's batch pass over the prefix bit-for-bit after EVERY
     * trigger. */
-  def mannKendallStream(cents: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    cents.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val batch = batch0.toDF()
-          .groupBy(col("source"), col("day").cast("long").as("day"))
-          .agg(sum(col("cents")).cast("long").as("sum_cents"),
-            count(lit(1)).cast("long").as("n"))
-        val total = foldState(batch, stateDir + "/dailies",
-          Seq("source", "day"))
-        graft.operators.LoadOps.mannKendallOf(
-            total.select(col("source"), col("day"),
-              expr("sum_cents div n").as("md")))
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+  def mannKendallStream(cents: DataFrame, stateDir: String): StreamingQuery =
+    foldGate(cents, stateDir, "dailies", Seq("source", "day")) {
+      _.groupBy(col("source"), col("day").cast("long").as("day"))
+        .agg(sum(col("cents")).cast("long").as("sum_cents"),
+          count(lit(1)).cast("long").as("n"))
+    } { total =>
+      graft.operators.LoadOps.mannKendallOf(
+        total.select(col("source"), col("day"), expr("sum_cents div n").as("md")))
+    }
 
   /** G38: STREAMING FORECAST BACKTEST — D64 as the forecaster's
     * always-on report card: the same per-(source, day) exact (Σcents, n)
@@ -896,24 +854,11 @@ object EventStreams {
       alphaPpm: Long = graft.operators.LoadOps.HoltAlphaPpm,
       betaPpm: Long = graft.operators.LoadOps.HoltBetaPpm,
       hCents: Long = graft.operators.LoadOps.HoltHCents,
-      warmup: Int = graft.operators.LoadOps.HoltWarmup)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    cents.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val batch = batch0.toDF()
-          .select(col("source"), col("day").cast("long"), col("cents").cast("long"))
-          .groupBy(col("source"), col("day"))
-          .agg(sum(col("cents")).as("s"), count(lit(1)).as("n"))
-        val total = foldState(batch, stateDir + "/moments", Seq("source", "day"))
-        graft.operators.LoadOps.forecastEvalOver(
-            graft.operators.LoadOps.holtOver(
-              total.select(col("source"), col("day"), expr("s div n").as("md")),
-              alphaPpm, betaPpm, hCents, warmup))
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+      warmup: Int = graft.operators.LoadOps.HoltWarmup): StreamingQuery =
+    foldGate(cents, stateDir, "moments", Seq("source", "day"))(dayMoments) { total =>
+      graft.operators.LoadOps.forecastEvalOver(graft.operators.LoadOps.holtOver(
+        dayMeans(total), alphaPpm, betaPpm, hCents, warmup))
+    }
 
   /** G39: STREAMING CALIBRATION — D59 as the live reliability diagram:
     * the SAME (source, cents) → (positives, total) cells the G35 AUC
@@ -922,22 +867,9 @@ object EventStreams {
     * [[graft.operators.LoadOps.calibrationCells]] — all-integer midrank
     * micros, so the diagram equals D59's batch pass over the prefix
     * bit-for-bit after EVERY trigger. */
-  def calibrationStream(labeled: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    labeled.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val batch = batch0.toDF()
-          .groupBy(col("source"), col("cents").cast("long").as("cents"))
-          .agg(sum(col("pos")).cast("long").as("np"),
-            count(lit(1)).cast("long").as("cnt"))
-        val total = foldState(batch, stateDir + "/cells",
-          Seq("source", "cents"))
-        graft.operators.LoadOps.calibrationCells(total)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+  def calibrationStream(labeled: DataFrame, stateDir: String): StreamingQuery =
+    foldGate(labeled, stateDir, "cells", Seq("source", "cents"))(labeledCells)(
+      graft.operators.LoadOps.calibrationCells)
 
   /** G37: STREAMING SRM — E64 as the always-on assignment-health pager
     * (an SRM that appears mid-experiment means the split BROKE mid-
@@ -949,22 +881,12 @@ object EventStreams {
     * through the SAME [[graft.operators.Relational.srmUnits]] all-integer
     * assembly, equal to E64's batch pass over the prefix after EVERY
     * trigger. */
-  def srmStream(events: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val batch = batch0.toDF()
-          .groupBy(col("event_type"), col("user_id").cast("long").as("user_id"))
-          .agg(count(lit(1)).cast("long").as("cnt"))
-        val total = foldState(batch, stateDir + "/units",
-          Seq("event_type", "user_id"))
-        graft.operators.Relational.srmUnits(
-            total.select(col("event_type"), col("user_id")))
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+  def srmStream(events: DataFrame, stateDir: String): StreamingQuery =
+    foldGate(events, stateDir, "units", Seq("event_type", "user_id")) {
+      _.groupBy(col("event_type"), col("user_id").cast("long").as("user_id"))
+        .agg(count(lit(1)).cast("long").as("cnt"))
+    }(total => graft.operators.Relational.srmUnits(
+      total.select(col("event_type"), col("user_id"))))
 
   /** G20: STREAMING A/B test — E36 as sequential monitoring (the
     * always-on experiment dashboard): per-(event_type) arm sufficient
@@ -976,19 +898,10 @@ object EventStreams {
     * zero float drift, so the report equals the one-shot pass over all
     * rows seen so far BIT-FOR-BIT after every trigger (spec-pinned) —
     * no rounding-boundary flake class at all. */
-  def abTtestStream(events: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = graft.operators.Relational.abCentMomentsOf(batch0.toDF())
-        val total = foldState(fresh, stateDir + "/moments", Seq("event_type"))
-        graft.operators.Relational.abTtestFromCents(total)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+  def abTtestStream(events: DataFrame, stateDir: String): StreamingQuery =
+    foldGate(events, stateDir, "moments", Seq("event_type"))(
+      graft.operators.Relational.abCentMomentsOf)(
+      graft.operators.Relational.abTtestFromCents)
 
   /** G18: STREAMING embedding drift — D36 as continuous monitoring: the
     * per-(label, dim, split) running (sum, count) moments accumulate in
@@ -1000,32 +913,24 @@ object EventStreams {
     * O(|labels|·dims·2) regardless of stream length; the report
     * assembly is the SAME `Similarity.driftReport` the batch op uses. */
   def embeddingDriftStream(vecs: DataFrame, stateDir: String, bar: Double = 0.8)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch.sparkSession
-        val partial = batch.toDF()
-          .withColumn("is_cur", col("vec_id") % 5 === 0)
-          .select(col("label"), col("is_cur"), posexplode(col("v")).as(Seq("pos", "x")))
-          .groupBy(col("label"), col("pos"), col("is_cur"))
-          .agg(sum(col("x")).as("s"), count(lit(1)).as("c"))
-        val merged = foldState(partial, stateDir + "/moments",
-          Seq("label", "pos", "is_cur"))
-        val byDim = merged.groupBy(col("label"), col("pos"))
-          .agg((sum(when(!col("is_cur"), col("s"))) /
-              sum(when(!col("is_cur"), col("c")))).as("rc"),
-            (sum(when(col("is_cur"), col("s"))) /
-              sum(when(col("is_cur"), col("c")))).as("cc"))
-        val counts = merged.filter(col("pos") === 0)
-          .groupBy(col("label"))
-          .agg(sum(when(!col("is_cur"), col("c")).otherwise(0L)).cast("long").as("n_ref"),
-            sum(when(col("is_cur"), col("c")).otherwise(0L)).cast("long").as("n_cur"))
-        graft.operators.Similarity.driftReport(byDim, counts, bar)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+      : StreamingQuery =
+    foldGate(vecs, stateDir, "moments", Seq("label", "pos", "is_cur")) {
+      _.withColumn("is_cur", col("vec_id") % 5 === 0)
+        .select(col("label"), col("is_cur"), posexplode(col("v")).as(Seq("pos", "x")))
+        .groupBy(col("label"), col("pos"), col("is_cur"))
+        .agg(sum(col("x")).as("s"), count(lit(1)).as("c"))
+    } { merged =>
+      val byDim = merged.groupBy(col("label"), col("pos"))
+        .agg((sum(when(!col("is_cur"), col("s"))) /
+            sum(when(!col("is_cur"), col("c")))).as("rc"),
+          (sum(when(col("is_cur"), col("s"))) /
+            sum(when(col("is_cur"), col("c")))).as("cc"))
+      val counts = merged.filter(col("pos") === 0)
+        .groupBy(col("label"))
+        .agg(sum(when(!col("is_cur"), col("c")).otherwise(0L)).cast("long").as("n_ref"),
+          sum(when(col("is_cur"), col("c")).otherwise(0L)).cast("long").as("n_cur"))
+      graft.operators.Similarity.driftReport(byDim, counts, bar)
+    }
 
   /** G17: STREAMING novelty scoring — F60 as corpus INGEST (the G15
     * ledger pattern on gram hashes instead of chunk hashes): documents
@@ -1085,23 +990,16 @@ object EventStreams {
     * exact-count tradeoff; the bounded-memory alternative is the CMS
     * stream (G5), this form is the exact one. */
   def heavyHittersStream(events: DataFrame, stateDir: String, k: Int = 150)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = batch0.toDF()
-          .select(col("user_id").cast("long").as("user_id"))
-          .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-        val total = foldState(fresh, stateDir + "/counts", Seq("user_id"))
-        // coalesce: an empty first micro-batch has no rows to sum — the
-        // grand total must be 0, not a null that kills the stream
-        val n = total.agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
-        graft.operators.Relational.heavyHittersFromCounts(total, n, k)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+      : StreamingQuery =
+    foldGate(events, stateDir, "counts", Seq("user_id")) {
+      _.select(col("user_id").cast("long").as("user_id"))
+        .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
+    } { total =>
+      // coalesce: an empty first micro-batch has no rows to sum — the
+      // grand total must be 0, not a null that kills the stream
+      val n = total.agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
+      graft.operators.Relational.heavyHittersFromCounts(total, n, k)
+    }
 
   /** G24: STREAMING Holt forecast — D43 as the always-on trend pager:
     * (source, day, Σcents, n) moments accumulate in persisted state
@@ -1116,24 +1014,10 @@ object EventStreams {
       alphaPpm: Long = graft.operators.LoadOps.HoltAlphaPpm,
       betaPpm: Long = graft.operators.LoadOps.HoltBetaPpm,
       hCents: Long = graft.operators.LoadOps.HoltHCents,
-      warmup: Int = graft.operators.LoadOps.HoltWarmup)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = batch0.toDF()
-          .select(col("source"), col("day").cast("long"), col("cents").cast("long"))
-          .groupBy(col("source"), col("day"))
-          .agg(sum(col("cents")).as("s"), count(lit(1)).as("n"))
-        val total = foldState(fresh, stateDir + "/moments", Seq("source", "day"))
-        graft.operators.LoadOps.holtOver(
-            total.select(col("source"), col("day"), expr("s div n").as("md")),
-            alphaPpm, betaPpm, hCents, warmup)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+      warmup: Int = graft.operators.LoadOps.HoltWarmup): StreamingQuery =
+    foldGate(events, stateDir, "moments", Seq("source", "day"))(dayMoments) { total =>
+      graft.operators.LoadOps.holtOver(dayMeans(total), alphaPpm, betaPpm, hCents, warmup)
+    }
 
   /** G22: STREAMING seasonal monitor — D41 as the always-on weekday
     * pager: per-(source, day) integer (Σcents, n) moments accumulate in
@@ -1148,24 +1032,9 @@ object EventStreams {
     * it from the accumulated history's min day each time. */
   def seasonalStream(events: DataFrame, stateDir: String,
       trainDays: Long = graft.operators.LoadOps.SeasonalTrainDays,
-      hCents: Long = graft.operators.LoadOps.SeasonalHCents)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = batch0.toDF()
-          .select(col("source"), col("day").cast("long"), col("cents").cast("long"))
-          .groupBy(col("source"), col("day"))
-          .agg(sum(col("cents")).as("s"), count(lit(1)).as("n"))
-        val total = foldState(fresh, stateDir + "/moments", Seq("source", "day"))
-        graft.operators.LoadOps.seasonalOf(
-            total.select(col("source"), col("day"), expr("s div n").as("md")),
-            trainDays, hCents)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+      hCents: Long = graft.operators.LoadOps.SeasonalHCents): StreamingQuery =
+    foldGate(events, stateDir, "moments", Seq("source", "day"))(dayMoments)(
+      total => graft.operators.LoadOps.seasonalOf(dayMeans(total), trainDays, hCents))
 
   /** G28: STREAMING Hampel filter — D55 as the always-on robust outlier
     * pager: per-(source, day) cent sums and counts accumulate in a
@@ -1179,24 +1048,9 @@ object EventStreams {
     * never event-proportional. */
   def hampelStream(events: DataFrame, stateDir: String,
       winDays: Int = graft.operators.LoadOps.HampelWindow,
-      minWin: Int = graft.operators.LoadOps.HampelMinWin)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = batch0.toDF()
-          .select(col("source"), col("day").cast("long"), col("cents").cast("long"))
-          .groupBy(col("source"), col("day"))
-          .agg(sum(col("cents")).as("s"), count(lit(1)).as("n"))
-        val total = foldState(fresh, stateDir + "/moments", Seq("source", "day"))
-        graft.operators.LoadOps.hampelOver(
-            total.select(col("source"), col("day"), expr("s div n").as("md")),
-            winDays, minWin)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+      minWin: Int = graft.operators.LoadOps.HampelMinWin): StreamingQuery =
+    foldGate(events, stateDir, "moments", Seq("source", "day"))(dayMoments)(
+      total => graft.operators.LoadOps.hampelOver(dayMeans(total), winDays, minWin))
 
   /** G23: STREAMING Benford screen — D42 as continuous forensics: the
     * per-(source, digit) occurrence counts accumulate in a persisted
@@ -1207,16 +1061,8 @@ object EventStreams {
     * every trigger bit-for-bit. State is O(|sources|·9) regardless of
     * stream length. */
   def benfordStream(rows: DataFrame, stateDir: String, flagBar: Long = 50000L)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream.outputMode("append")
-      .foreachBatch { (batch0: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        import org.apache.spark.sql.functions._
-        val spark = batch0.sparkSession
-        val fresh = graft.operators.LoadOps.benfordCountsOf(batch0.toDF())
-        val total = foldState(fresh, stateDir + "/counts", Seq("source", "digit"))
-        graft.operators.LoadOps.benfordFromCounts(total, flagBar)
-          .write.mode("overwrite").parquet(stateDir + "/report")
-        (): Unit
-      }
-      .start()
+      : StreamingQuery =
+    foldGate(rows, stateDir, "counts", Seq("source", "digit"))(
+      graft.operators.LoadOps.benfordCountsOf)(
+      graft.operators.LoadOps.benfordFromCounts(_, flagBar))
 }

@@ -3,27 +3,33 @@ package graft.streaming
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import scala.util.control.NonFatal
 
 /** Oracle-gate entry points for the G-family (SURVEY §2 G): each runs a
-  * REAL Structured Streaming query to completion (file source →
-  * `Trigger.AvailableNow` → sink, through the streaming engine's state
-  * machinery), then returns the materialized result as a batch frame the
-  * driver hashes against a DuckDB oracle — promoting the streaming rows
-  * from spec-only to the same hash-exact gate every batch operator sits
-  * behind.
+  * REAL Structured Streaming query to completion (file source → sink,
+  * through the streaming engine's state machinery), then returns the
+  * materialized result as a batch frame the driver hashes against a
+  * DuckDB oracle — promoting the streaming rows from spec-only to the
+  * same hash-exact gate every batch operator sits behind.
   *
-  * Determinism contract per entry: operators whose cross-batch semantics
-  * are ARRIVAL-ORDER-dependent (sessionize G3, paragraph ledger G15,
-  * Markov boundary pairs G19) run as one availableNow micro-batch — the
-  * in-order case their docs declare, where stream ≡ batch provably;
-  * operators whose state folds ASSOCIATIVELY (exact dedup G2, integer
-  * CUSUM dailies G21) run MULTI-batch (`maxFilesPerTrigger=1` over a
-  * multi-file input) because any batch split folds to the same answer.
-  * The multi-batch specs in StreamingSpec stay the slicing-equivalence
-  * proof; these entries are the end-to-end oracle check. */
+  * Every single-input entry goes through [[gate]], whose `batches`
+  * argument carries the determinism contract: operators whose
+  * cross-batch semantics are ARRIVAL-ORDER-dependent (sessionize G3,
+  * paragraph ledger G15, Markov boundary pairs G19, …) run as ONE
+  * micro-batch (`batches = 1`) — the in-order case their docs declare,
+  * where stream ≡ batch provably; operators whose state folds
+  * ASSOCIATIVELY (exact dedup G2, the cumulative fold gates, the
+  * sketches) run MULTI-batch (`maxFilesPerTrigger=1` over `batches`
+  * input files) because any batch split folds to the same answer. The
+  * multi-batch specs in StreamingSpec stay the slicing-equivalence
+  * proof; these entries are the end-to-end oracle check.
+  *
+  * CONTRACT: gates run SERIALLY on the shared session (Bench and Verify
+  * drive them one at a time): [[runSized]] sets and restores a
+  * session-level conf, which is not safe under concurrent gate runs the
+  * way `Scorecard.parRun` drives batch gates — a concurrent driver must
+  * clone the session (`spark.newSession()`) per gate instead. */
 object StreamGate {
 
   private def root(spark: SparkSession, name: String): String =
@@ -40,95 +46,103 @@ object StreamGate {
     dir
   }
 
-  /** Run one gate's streaming section with `spark.sql.shuffle.partitions`
-    * — which fixes the query's STATE-STORE count at start — sized to the
-    * INPUT VOLUME instead of the session's core count (r16, from the r15
-    * core curve: stream_outer_join ran 2.8 s at 8 partitions vs 8.1 s at
-    * 32 on identical data, because every micro-batch pays a per-partition
-    * state-store open/commit/publish protocol regardless of how little
-    * state lives there). Policy: one partition per 16 MiB of staged
-    * input, with a FLOOR of 8 (floor 1 measured WORSE at sf0.1 — it
-    * serialized the per-key compute of the heavy keyed gates:
-    * winsorized/psi/calibration regressed ~15%) and a cap at the
-    * session's parallelism that yields to the floor on very small
-    * machines — tiny gate corpora get 8 stores per trigger, a 100×
-    * corpus grows stores linearly, and a real cluster saturates its
-    * cores.
-    *
-    * Per-gate floors were HYPOTHESIZED and REFUTED (r17): the seven
-    * keyed-agg gates that regressed 7–18% r15→r16 (cramers/chi2/hampel/
-    * constraints/page_hinkley/changepoint/mann_kendall) were A/B'd
-    * isolated at sf0.1 with floor 8 vs a core-count (32) floor — floor 8
-    * won 6 of 7 on 2×2 minima (chi2 4.08 vs 4.85 s, page_hinkley 2.85
-    * vs 3.36; hampel the lone inversion, inside the ±25% run-to-run
-    * variance a repeat run showed). Their r16 suite regressions are
-    * suite-context drift, not partition-count — the same wander class
-    * the bench's evidence block tracks — so the floor stays a single
-    * uniform policy. The `floor` parameter remains for callers with a
-    * measured case; no gate currently overrides it.
-    *
-    * Values are unchanged by partition count (every gate's fold is
-    * key-local and its oracle hash-exact); the session conf is restored
-    * on exit even if the gate throws. The conf must stay applied through
-    * `awaitTermination` because the stream's session clone happens on
-    * the query thread, not inside `start()`.
-    *
-    * CONTRACT: gates run SERIALLY on the shared session (Bench and
-    * Verify both drive them one at a time) — this set/restore of a
-    * session-level conf is not safe under concurrent gate runs the way
-    * `Scorecard.parRun` drives batch gates; a concurrent driver must
-    * clone the session (`spark.newSession()`) per gate instead. */
-  private def sizedToInput[T](spark: SparkSession, base: String,
-      floor: Long = 8L)(body: => T): T = {
+  /** State-store partitions per gate: one per 16 MiB of staged input,
+    * never fewer than 8 — every micro-batch pays a per-partition
+    * state-store protocol, and fewer than 8 serializes the heavy keyed
+    * folds (measurements in OPTIMIZATION_r18.md). */
+  private val MinStreamParts = 8L
+  private val BytesPerStreamPart = 16L << 20
+
+  /** Run the query `start` returns to completion (`processAllAvailable`,
+    * `stop`, `awaitTermination`) with `spark.sql.shuffle.partitions` —
+    * which fixes the query's state-store count at start — sized to the
+    * bytes under `base`, capped at the session's parallelism. The conf
+    * stays applied through `awaitTermination` because the stream's
+    * session clone happens on the query thread. On exit, even if the
+    * gate throws, the conf is restored and the gate's state is released:
+    * its fold-cache entries and the executor's state-store providers,
+    * whose in-memory copies would otherwise tax whatever runs next on
+    * the session. Values do not depend on the partition count: every
+    * gate's fold is key-local. */
+  private def runSized(spark: SparkSession, base: String)(start: => StreamingQuery): Unit = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     val p = new org.apache.hadoop.fs.Path(base)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = try fs.getContentSummary(p).getLength catch { case NonFatal(_) => 0L }
-    val per = 16L << 20
-    // env override wins over the per-gate floor; a malformed value falls
-    // back rather than throwing mid-suite
-    val f = sys.env.get("SPARK_GRAFT_STREAM_MIN_PARTS")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption).getOrElse(floor)
-    val target = math.max(f, math.min(
-      spark.sparkContext.defaultParallelism.toLong, (bytes + per - 1) / per))
+    val target = math.max(MinStreamParts, math.min(
+      spark.sparkContext.defaultParallelism.toLong,
+      (bytes + BytesPerStreamPart - 1) / BytesPerStreamPart))
     spark.conf.set(key, target.toString)
-    // a completed gate must not pin its state in the executor: the
-    // provider cache holds an in-memory copy of every partition's final
-    // state until maintenance eviction, and that residue measurably
-    // taxes whatever runs next on the session (r17: pipeline_media_
-    // curation benched 2.4 s solo vs 5.4-6.1 s after ONE stream gate;
-    // the cross-entry wander class tracked since r14 follows the same
-    // alphabetical shadow - every t*/batch entry after the stream_*
-    // block, and every pass-2 entry, ran against ~38 gates' loaded
-    // providers)
-    try body finally {
+    try {
+      val q = start
+      q.processAllAvailable(); q.stop(); q.awaitTermination()
+    } finally {
       spark.conf.set(key, prev)
+      EventStreams.releaseFolds(base)
       try org.apache.spark.sql.GraftShims.unloadStateStores()
       catch { case NonFatal(_) => () }
     }
   }
+
+  /** File stream over the parquet files at `path`, with the schema read
+    * back from them; one file per trigger when `perFile`. */
+  private def streamOf(spark: SparkSession, path: String, perFile: Boolean): DataFrame = {
+    val r = spark.readStream.schema(spark.read.parquet(path).schema)
+    (if (perFile) r.option("maxFilesPerTrigger", "1") else r).parquet(path)
+  }
+
+  /** The one gate run: stage `input` under a fresh `graft_stream/<name>`
+    * dir as one file (`batches = 1`) or `batches` files read one per
+    * trigger, stream it back, run `start(src, base)` to completion
+    * through [[runSized]], and return `base` for reading the result. */
+  private def gate(spark: SparkSession, name: String, input: DataFrame, batches: Int)(
+      start: (DataFrame, String) => StreamingQuery): String = {
+    val base = fresh(spark, name)
+    (if (batches == 1) input else input.repartition(batches)).write.parquet(s"$base/in")
+    runSized(spark, base)(start(streamOf(spark, s"$base/in", batches > 1), base))
+    base
+  }
+
+  /** [[gate]] over an `EventStreams` state gate writing under
+    * `<base>/state`; returns the report it published. */
+  private def reportOf(spark: SparkSession, name: String, input: DataFrame, batches: Int)(
+      stream: (DataFrame, String) => StreamingQuery): DataFrame = {
+    val base = gate(spark, name, input, batches)((src, base) => stream(src, s"$base/state"))
+    spark.read.parquet(s"$base/state/report")
+  }
+
+  /** Memory sink `graft_stream_<name>` with its checkpoint under `base`. */
+  private def toMemory(df: DataFrame, mode: String, name: String, base: String,
+      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    df.writeStream.outputMode(mode)
+      .format("memory").queryName(s"graft_stream_$name")
+      .option("checkpointLocation", s"$base/ckpt")
+      .trigger(trigger).start()
+
+  /** (source, day, cents) per event — the daily-moments gates' input. */
+  private def dailyCents(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir).eventsSec
+      .select(col("event_type").as("source"),
+        expr("sec div 86400").cast("long").as("day"),
+        expr("cast(round(value * 100) as long)").as("cents"))
+
+  /** (source, cents, pos) per event, weekend days positive — the
+    * classifier-evaluation gates' input. */
+  private def labeledCents(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir).eventsSec
+      .select(col("event_type").as("source"),
+        expr("cast(round(value * 100) as long)").as("cents"),
+        expr("cast(((sec div 86400) + 4) % 7 in (0, 6) as long)").as("pos"))
 
   /** G1 gate: watermarked tumbling-window aggregation run availableNow in
     * complete mode to a memory sink — the final table equals E13's batch
     * bucketing (same epoch-aligned 1-hour windows), oracled by the same
     * SQL. */
   def streamWindowAgg(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "window_agg")
-    Tables(spark, dir).eventsSec
-      .select(timestamp_seconds(col("sec")).as("ts"), col("event_type"), col("value"))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("ts", TimestampType),
-        StructField("event_type", StringType), StructField("value", DoubleType))))
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.windowedCounts(src)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_window_agg")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    gate(spark, "window_agg", Tables(spark, dir).eventsSec
+        .select(timestamp_seconds(col("sec")).as("ts"), col("event_type"), col("value")), 1) {
+      (src, base) => toMemory(EventStreams.windowedCounts(src), "complete", "window_agg", base)
     }
     spark.table("graft_stream_window_agg")
       .select(col("bucket_start").cast("long").as("bucket_start"),
@@ -144,24 +158,10 @@ object StreamGate {
     * StreamingSpec's subject). The emitted key set is then rolled up to
     * a deterministic per-type report. */
   def streamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "dedup")
-    Tables(spark, dir).eventsSec
-      .select(timestamp_seconds(col("sec")).as("ts"),
-        col("user_id"), col("event_type"))
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("ts", TimestampType),
-        StructField("user_id", LongType), StructField("event_type", StringType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.dedupStream(src, Seq("user_id", "event_type"), "3650 days")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stream_dedup")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    gate(spark, "dedup", Tables(spark, dir).eventsSec
+        .select(timestamp_seconds(col("sec")).as("ts"), col("user_id"), col("event_type")), 4) {
+      (src, base) => toMemory(EventStreams.dedupStream(src, Seq("user_id", "event_type"),
+        "3650 days"), "append", "dedup", base)
     }
     spark.table("graft_stream_dedup")
       .groupBy(col("event_type"))
@@ -176,21 +176,10 @@ object StreamGate {
     * the oracle is E12's session rollup MINUS each user's final session. */
   def streamSessionize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = fresh(spark, "sessionize")
-    Tables(spark, dir).eventsSec
-      .select(col("user_id"), col("sec"), col("value"))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("sec", LongType), StructField("value", DoubleType))))
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.sessionizeStream(src.as[SessionEvent])
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stream_sessionize")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    gate(spark, "sessionize", Tables(spark, dir).eventsSec
+        .select(col("user_id"), col("sec"), col("value")), 1) {
+      (src, base) => toMemory(EventStreams.sessionizeStream(src.as[SessionEvent]).toDF(),
+        "append", "sessionize", base)
     }
     spark.table("graft_stream_sessionize")
       .select(col("user_id"), col("n_events"), col("start_sec"), col("end_sec"),
@@ -202,106 +191,51 @@ object StreamGate {
     * the wired corpus (one batch — the in-order case where the ledger's
     * keep-first equals F49's min-occurrence rule exactly); the report
     * parquet the stream emits IS the gated frame. */
-  def streamParagraphDedup(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "paragraph")
-    graft.operators.Dedup.paragraphWire(
-        Tables(spark, dir).documents.select(col("doc_id"), col("text")))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.paragraphDedupStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("doc_id"))
-  }
+  def streamParagraphDedup(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "paragraph", graft.operators.Dedup.paragraphWire(
+        Tables(spark, dir).documents.select(col("doc_id"), col("text"))), 1)(
+      EventStreams.paragraphDedupStream(_, _))
+      .orderBy(col("doc_id"))
 
   /** G19 gate: the streaming Markov state store run availableNow (one
     * batch — the in-order case where stored-last boundary pairs equal the
     * batch window pass); the cumulative report equals E35 and shares its
     * oracle. */
-  def streamMarkov(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "markov")
-    Tables(spark, dir).eventsSec
-      .select(col("user_id"), col("sec"), col("event_id"), col("event_type"))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("sec", LongType), StructField("event_id", LongType),
-        StructField("event_type", StringType))))
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.markovStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
+  def streamMarkov(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "markov", Tables(spark, dir).eventsSec
+        .select(col("user_id"), col("sec"), col("event_id"), col("event_type")), 1)(
+      EventStreams.markovStream)
       .orderBy(col("state"), col("next_state"))
-  }
 
   /** G29 gate: streaming top paths run to completion — the in-order
     * single availableNow batch (the G19 arrival-order contract; the
     * multi-batch slicing-equivalence proof lives in StreamingSpec);
     * the final cumulative report equals E59's batch pass and shares
     * its oracle verbatim. */
-  def streamTopPaths(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "top_paths")
-    Tables(spark, dir).eventsSec
-      .select(col("user_id"), col("event_id"), col("sec"), col("event_type"))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType),
-        StructField("event_id", LongType), StructField("sec", LongType),
-        StructField("event_type", StringType))))
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.topPathsStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("rank"))
-  }
+  def streamTopPaths(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "top_paths", Tables(spark, dir).eventsSec
+        .select(col("user_id"), col("event_id"), col("sec"), col("event_type")), 1)(
+      EventStreams.topPathsStream(_, _))
+      .orderBy(col("rank"))
 
   /** G30 gate: streaming Cramér's V run MULTI-batch over the
     * (l_returnflag, l_linestatus) pair — contingency cells fold
     * associatively across 4 triggers; the final report equals E56's
     * middle branch and is oracled by that branch's SQL. */
-  def streamCramers(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "cramers")
-    Tables(spark, dir).lineitem
-      .select(col("l_returnflag").as("a"), col("l_linestatus").as("b"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("a", StringType),
-        StructField("b", StringType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.cramersStream(src, s"$base/state",
-      "l_returnflag", "l_linestatus")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
-  }
+  def streamCramers(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "cramers", Tables(spark, dir).lineitem
+        .select(col("l_returnflag").as("a"), col("l_linestatus").as("b")), 4)(
+      EventStreams.cramersStream(_, _, "l_returnflag", "l_linestatus"))
 
   /** G31 gate: streaming winsorized/trimmed means run MULTI-batch —
     * value cells fold associatively across 4 triggers; the final
     * report equals E58's batch pass and shares its oracle verbatim. */
-  def streamWinsorized(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "winsorized")
-    Tables(spark, dir).lineitem
-      .select(col("l_returnflag").as("flag"),
-        expr("cast(round(l_extendedprice * 100) as long)").as("v"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("flag", StringType),
-        StructField("v", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.winsorizedStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("l_returnflag"))
-  }
+  def streamWinsorized(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "winsorized", Tables(spark, dir).lineitem
+        .select(col("l_returnflag").as("flag"),
+          expr("cast(round(l_extendedprice * 100) as long)").as("v")), 4)(
+      EventStreams.winsorizedStream)
+      .orderBy(col("l_returnflag"))
 
   /** G16 gate: the streaming constraint monitor — the SAME
     * `checkConstraintsOf` plan on a streaming lineitem source in
@@ -310,18 +244,9 @@ object StreamGate {
     * associatively across triggers, so the final cumulative report
     * equals D35's batch pass and shares its oracle verbatim. */
   def streamConstraints(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "constraints")
-    val li = Tables(spark, dir).lineitem
-    li.repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream.schema(li.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.constraintMonitorStream(src)
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_constraints")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    gate(spark, "constraints", Tables(spark, dir).lineitem, 4) {
+      (src, base) => toMemory(EventStreams.constraintMonitorStream(src),
+        "complete", "constraints", base)
     }
     spark.table("graft_stream_constraints").orderBy(col("constraint_name"))
   }
@@ -331,41 +256,21 @@ object StreamGate {
     * (the one truly associative statistic), and the final verdict
     * through the shared `heavyHittersFromCounts` filter equals E29's
     * two-pass batch op, sharing its oracle verbatim. */
-  def streamHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "heavy_hitters")
-    Tables(spark, dir).events.select(col("user_id"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("user_id", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.heavyHittersStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("user_id"))
-  }
+  def streamHeavyHitters(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "heavy_hitters", Tables(spark, dir).events.select(col("user_id")), 4)(
+      EventStreams.heavyHittersStream(_, _))
+      .orderBy(col("user_id"))
 
   /** G23 gate: the streaming Benford screen run MULTI-batch — per
     * (source, digit) counts accumulate across 4 triggers (associative
     * integers, zero drift), final verdict via the shared
     * `benfordFromCounts` equals D42's batch op and shares its oracle. */
-  def streamBenford(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "benford")
-    Tables(spark, dir).events
-      .select(col("event_type").as("source"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.benfordStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
+  def streamBenford(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "benford", Tables(spark, dir).events
+        .select(col("event_type").as("source"),
+          expr("cast(round(value * 100) as long)").as("cents")), 4)(
+      EventStreams.benfordStream(_, _))
       .orderBy(col("source"), col("digit"))
-  }
 
   /** G24 gate: the streaming Holt forecast run MULTI-batch — per
     * (source, day) integer (Σcents, n) moments accumulate across 4
@@ -373,68 +278,23 @@ object StreamGate {
     * metric), and the final `holtOver` fold over the accumulated
     * dailies equals D43's batch trajectory bit-for-bit, sharing its
     * oracle. */
-  def streamHolt(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "holt")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("sec div 86400").cast("long").as("day"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.holtStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
+  def streamHolt(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "holt", dailyCents(spark, dir), 4)(EventStreams.holtStream(_, _))
       .orderBy(col("source"), col("day"))
-  }
 
   /** G22 gate: the streaming seasonal monitor run MULTI-batch — the
     * same accumulated-moments argument as G24; the final `seasonalOf`
     * report equals D41's batch pass bit-for-bit, sharing its oracle. */
-  def streamSeasonal(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "seasonal")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("sec div 86400").cast("long").as("day"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.seasonalStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
+  def streamSeasonal(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "seasonal", dailyCents(spark, dir), 4)(EventStreams.seasonalStream(_, _))
       .orderBy(col("source"), col("day"))
-  }
 
   /** G28 gate: the streaming Hampel filter run MULTI-batch — the same
     * accumulated-moments argument as G22/G24; the final `hampelOver`
     * report equals D55's batch pass bit-for-bit, sharing its oracle. */
-  def streamHampel(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "hampel")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("sec div 86400").cast("long").as("day"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.hampelStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
+  def streamHampel(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "hampel", dailyCents(spark, dir), 4)(EventStreams.hampelStream(_, _))
       .orderBy(col("source"), col("day"))
-  }
 
   /** G14 gate: continuous changelog apply run MULTI-batch — the
     * latest-wins reduction is associative-commutative over unique seqs
@@ -443,18 +303,9 @@ object StreamGate {
     * where the batch boundaries land; the final state rolled up by
     * final-event class shares D34's oracle verbatim. */
   def streamChangelog(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "changelog")
-    graft.operators.LoadOps.ordersChangelog(spark, dir)
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("key", LongType),
-        StructField("seq", LongType), StructField("op", StringType),
-        StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
     import spark.implicits._
-    sizedToInput(spark, base) {
-    val q = EventStreams.changelogStream(src.as[ChangeEvent], s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
+    val base = gate(spark, "changelog", graft.operators.LoadOps.ordersChangelog(spark, dir), 4) {
+      (src, base) => EventStreams.changelogStream(src.as[ChangeEvent], s"$base/state")
     }
     spark.read.parquet(s"$base/state")
       .groupBy(col("op").as("final_op"))
@@ -472,27 +323,14 @@ object StreamGate {
     * up through the same aggregation as the batch replay and share
     * D33's oracle verbatim. */
   def streamBreaker(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "breaker")
-    Tables(spark, dir).eventsSec
-      .withColumn("failed", (col("sec") % 604800L < 86400L).cast("int"))
-      .select(col("event_type").as("source"), col("sec"),
-        col("event_id").as("attempt_id"), col("failed"))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("sec", LongType), StructField("attempt_id", LongType),
-        StructField("failed", IntegerType))))
-      .parquet(s"$base/in")
     import spark.implicits._
-    sizedToInput(spark, base) {
-    val q = EventStreams
-      .circuitBreakerStream(src.as[Attempt], threshold = 5, cooldownSec = 14400L)
-      .toDF()
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stream_breaker")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    gate(spark, "breaker", Tables(spark, dir).eventsSec
+        .withColumn("failed", (col("sec") % 604800L < 86400L).cast("int"))
+        .select(col("event_type").as("source"), col("sec"),
+          col("event_id").as("attempt_id"), col("failed")), 1) {
+      (src, base) => toMemory(EventStreams
+        .circuitBreakerStream(src.as[Attempt], threshold = 5, cooldownSec = 14400L)
+        .toDF(), "append", "breaker", base)
     }
     spark.table("graft_stream_breaker")
       .groupBy(col("source"))
@@ -512,20 +350,10 @@ object StreamGate {
     * batch over the corpus (the in-order case where batch-first carrier
     * equals F60's global min-owner rule); the emitted per-doc reports
     * share F60's oracle verbatim. */
-  def streamNovelty(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "novelty")
-    Tables(spark, dir).documents.select(col("doc_id"), col("text"))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.noveltyStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("doc_id"))
-  }
+  def streamNovelty(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "novelty", Tables(spark, dir).documents.select(col("doc_id"), col("text")), 1)(
+      EventStreams.noveltyStream(_, _))
+      .orderBy(col("doc_id"))
 
   /** G11 gate: stream-static enrichment run MULTI-batch — each trigger
     * of the fact stream broadcast-joins the static source catalog
@@ -533,24 +361,12 @@ object StreamGate {
     * rows); the emitted enriched facts roll up per catalog source and
     * hash-match a plain SQL join oracle. */
   def streamEnrich(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "enrich")
-    Tables(spark, dir).events
-      .select((col("user_id") % 25).as("source_key"), col("event_type"),
-        col("value"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source_key", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
     val dim = Tables(spark, dir).nation
       .select(col("n_nationkey").cast("long").as("source_key"), col("n_name"))
-    sizedToInput(spark, base) {
-    val q = EventStreams.enrichStream(src, dim, "source_key")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stream_enrich")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    gate(spark, "enrich", Tables(spark, dir).events
+        .select((col("user_id") % 25).as("source_key"), col("event_type"), col("value")), 4) {
+      (src, base) => toMemory(EventStreams.enrichStream(src, dim, "source_key"),
+        "append", "enrich", base)
     }
     spark.table("graft_stream_enrich")
       .groupBy(col("n_name"))
@@ -563,23 +379,10 @@ object StreamGate {
     * files, one per trigger) — each (source, day) daily row is unique, so
     * any batch split folds the same accumulated run log, and the final
     * report equals D40's batch trajectory bit-for-bit (integer cents). */
-  def streamCusum(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "cusum")
-    graft.operators.LoadOps.dailyMd(spark, dir)
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("md", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.cusumStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
+  def streamCusum(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "cusum", graft.operators.LoadOps.dailyMd(spark, dir), 4)(
+      EventStreams.cusumStream(_, _))
       .orderBy(col("source"), col("day"))
-  }
 
   /** G33 gate: the streaming Page–Hinkley monitor run MULTI-batch (4
     * input files, one per trigger) — each (source, day) daily row is
@@ -587,162 +390,55 @@ object StreamGate {
     * through the shared cell store, and the final report equals D58's
     * batch trajectory bit-for-bit (integer micro-cents), sharing its
     * oracle verbatim. */
-  def streamPageHinkley(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "pagehinkley")
-    graft.operators.LoadOps.dailyMd(spark, dir)
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("md", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.pageHinkleyStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
+  def streamPageHinkley(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "pagehinkley", graft.operators.LoadOps.dailyMd(spark, dir), 4)(
+      EventStreams.pageHinkleyStream(_, _))
       .orderBy(col("source"), col("day"))
-  }
 
   /** G34 gate: the streaming PSI monitor run MULTI-batch (4 input
     * files, one per trigger, arbitrary row split — cell folding is
     * additive so slicing cannot matter). The completed run equals
     * D61's batch pass and shares its oracle verbatim. */
-  def streamPsi(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "psi")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("sec div 86400").cast("long").as("day"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.psiStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("source"))
-  }
+  def streamPsi(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "psi", dailyCents(spark, dir), 4)(EventStreams.psiStream)
+      .orderBy(col("source"))
 
   /** G35 gate: the streaming AUC monitor run MULTI-batch (4 files, one
     * per trigger, arbitrary split — cell folding is additive). Equals
     * E63's batch pass; shares its oracle verbatim. */
-  def streamAuc(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "auc")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("cast(round(value * 100) as long)").as("cents"),
-        expr("cast(((sec div 86400) + 4) % 7 in (0, 6) as long)").as("pos"))
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("cents", LongType), StructField("pos", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.aucStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("source"))
-  }
+  def streamAuc(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "auc", labeledCents(spark, dir), 4)(EventStreams.aucStream)
+      .orderBy(col("source"))
 
   /** G36 gate: the streaming Mann–Kendall pager run MULTI-batch (4
     * files, one per trigger — daily moments fold additively, so the day
     * means recover exactly at any slicing). Equals D60's batch pass;
     * shares its oracle verbatim. */
-  def streamMannKendall(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "mannkendall")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("sec div 86400").cast("long").as("day"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.mannKendallStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("source"))
-  }
+  def streamMannKendall(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "mannkendall", dailyCents(spark, dir), 4)(EventStreams.mannKendallStream)
+      .orderBy(col("source"))
 
   /** G38 gate: the streaming forecast backtest run MULTI-batch (4
     * files, one per trigger — daily moments fold additively). Equals
     * D64's batch pass; shares its oracle verbatim. */
-  def streamForecastEval(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "feval")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("sec div 86400").cast("long").as("day"),
-        expr("cast(round(value * 100) as long)").as("cents"))
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("day", LongType), StructField("cents", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.forecastEvalStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("source"))
-  }
+  def streamForecastEval(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "feval", dailyCents(spark, dir), 4)(EventStreams.forecastEvalStream(_, _))
+      .orderBy(col("source"))
 
   /** G39 gate: the streaming calibration diagram run MULTI-batch (4
     * files, one per trigger — cell folding additive). Equals D59's
     * batch pass; shares its oracle verbatim. */
-  def streamCalibration(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "calib")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type").as("source"),
-        expr("cast(round(value * 100) as long)").as("cents"),
-        expr("cast(((sec div 86400) + 4) % 7 in (0, 6) as long)").as("pos"))
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("cents", LongType), StructField("pos", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.calibrationStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
+  def streamCalibration(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "calib", labeledCents(spark, dir), 4)(EventStreams.calibrationStream)
       .orderBy(col("source"), col("bin"))
-  }
 
   /** G37 gate: the streaming SRM pager run MULTI-batch (4 files, one
     * per trigger — unit-set union is slicing-independent). Equals E64's
     * batch pass; shares its oracle verbatim. */
-  def streamSrm(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "srm")
-    Tables(spark, dir).events
-      .select(col("event_type"), col("user_id"))
-      .repartition(4)
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("event_type", StringType),
-        StructField("user_id", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.srmStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("event_type"))
-  }
+  def streamSrm(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "srm", Tables(spark, dir).events.select(col("event_type"), col("user_id")), 4)(
+      EventStreams.srmStream)
+      .orderBy(col("event_type"))
 
   /** G20 gate: the streaming A/B monitor run MULTI-batch (4 input files,
     * one per trigger) — per-arm integer cent-moments accumulate
@@ -750,67 +446,32 @@ object StreamGate {
     * one-shot pass over the corpus and shares E36's oracle verbatim
     * (values are cent-granular, so the cent-moment means/variances round
     * to the same 4-decimal inputs the var_samp path sees). */
-  def streamAbtest(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "abtest")
-    Tables(spark, dir).events
-      .select(col("event_type"), col("user_id"), col("value"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("event_type", StringType),
-        StructField("user_id", LongType), StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.abTtestStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("event_type"))
-  }
+  def streamAbtest(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "abtest", Tables(spark, dir).events
+        .select(col("event_type"), col("user_id"), col("value")), 4)(
+      EventStreams.abTtestStream)
+      .orderBy(col("event_type"))
 
   /** G18 gate: the streaming embedding-drift monitor run MULTI-batch
     * (3 input files, one per trigger) — per-(label, dim, split)
     * (sum, count) moments accumulate in state, means recover exactly from
     * the totals, so the final report equals D36's batch pass over the
     * full corpus and shares its oracle verbatim. */
-  def streamDrift(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "drift")
-    graft.operators.Similarity.vectors(spark, dir)
-      .repartition(3).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("vec_id", LongType),
-        StructField("label", IntegerType),
-        StructField("v", ArrayType(DoubleType)))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.embeddingDriftStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("label"))
-  }
+  def streamDrift(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "drift", graft.operators.Similarity.vectors(spark, dir), 3)(
+      EventStreams.embeddingDriftStream(_, _))
+      .orderBy(col("label"))
 
   /** G10 gate: the decay-average monitor run MULTI-batch (4 input files,
     * one per trigger) — per-(source, day) partial duration sums fold into
     * the persisted ledger, each trigger re-runs the shared D19 core over
     * the summed ledger, so the final report equals the batch pass over
     * the corpus and shares D19's oracle verbatim. */
-  def streamDecay(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "decay")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type"), col("sec"), col("value"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("event_type", StringType),
-        StructField("sec", LongType), StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.decayLedgerStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report")
+  def streamDecay(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "decay", Tables(spark, dir).eventsSec
+        .select(col("event_type"), col("sec"), col("value")), 4)(
+      EventStreams.decayLedgerStream(_, _))
       .orderBy(col("source"), col("day"))
-  }
 
   /** G26 gate: the chi-square hour-profile monitor run MULTI-batch
     * (4 input files, one per trigger) — per-(source, hour-of-day) era
@@ -822,24 +483,13 @@ object StreamGate {
     * so the final report equals the batch pass and shares D47's oracle
     * verbatim. */
   def streamChi2(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "chi2")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type"), col("sec"))
-      .repartition(4).write.parquet(s"$base/in")
-    val baseline = Tables(spark, dir).eventsSec
-      .groupBy(col("event_type"))
+    val ev = Tables(spark, dir).eventsSec
+    val baseline = ev.groupBy(col("event_type"))
       .agg(expr("min(sec) + (max(sec) - min(sec)) div 2").as("ref_end_sec"))
       .localCheckpoint(true)
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("event_type", StringType),
-        StructField("sec", LongType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.chi2LedgerStream(src, s"$base/state", baseline)
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("event_type"))
+    reportOf(spark, "chi2", ev.select(col("event_type"), col("sec")), 4)(
+      EventStreams.chi2LedgerStream(_, _, baseline))
+      .orderBy(col("event_type"))
   }
 
   /** G27 gate: the change-point monitor run MULTI-batch (4 input files,
@@ -847,22 +497,11 @@ object StreamGate {
     * partials fold into the persisted ledger, each trigger re-runs the
     * shared D48 core over the merged dailies, so the final report
     * equals the batch pass and shares D48's oracle verbatim. */
-  def streamChangepoint(spark: SparkSession, dir: String): DataFrame = {
-    val base = fresh(spark, "chgpt")
-    Tables(spark, dir).eventsSec
-      .select(col("event_type"), col("sec"), col("value"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("event_type", StringType),
-        StructField("sec", LongType), StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.changepointLedgerStream(src, s"$base/state")
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
-    }
-    spark.read.parquet(s"$base/state/report").orderBy(col("source"))
-  }
+  def streamChangepoint(spark: SparkSession, dir: String): DataFrame =
+    reportOf(spark, "chgpt", Tables(spark, dir).eventsSec
+        .select(col("event_type"), col("sec"), col("value")), 4)(
+      EventStreams.changepointLedgerStream(_, _))
+      .orderBy(col("source"))
 
   /** G4 gate: a REAL stream-stream interval-overlap join — both sides
     * arrive as independent multi-batch file streams (2 files each, one
@@ -888,29 +527,25 @@ object StreamGate {
     ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("pur_id"), col("sec").as("s2"))
       .repartition(2).write.parquet(s"$base/inB")
-    def src(path: String, id: String, s: String) = spark.readStream
-      .schema(StructType(Seq(StructField(id, LongType), StructField(s, LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(path)
     def cells(s: Column, e: Column) =
       explode(sequence(floor(s / cellSec).cast("long"), floor(e / cellSec).cast("long")))
-    val inc = src(s"$base/inA", "inc_id", "s1")
-      .withColumn("e1", col("s1") + incidentSec)
-      .withColumn("cell", cells(col("s1"), col("e1")))
-    val pur = src(s"$base/inB", "pur_id", "s2")
-      .withColumn("e2", col("s2") + purchaseSec)
-      .withColumn("cell", cells(col("s2"), col("e2")))
-    val joined = inc.join(pur, Seq("cell"))
-      .filter(col("s1") <= col("e2") && col("s2") <= col("e1"))
-      .filter(col("cell") === floor(greatest(col("s1"), col("s2")) / cellSec).cast("long"))
-      .select(col("inc_id"), col("pur_id"),
-        greatest(col("s1"), col("s2")).as("ov_start"),
-        least(col("e1"), col("e2")).as("ov_end"))
-      .withColumn("ov_sec", col("ov_end") - col("ov_start"))
-    sizedToInput(spark, base) {
-    val q = joined.writeStream.outputMode("append").format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt").start()
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
+    runSized(spark, base) {
+      val inc = streamOf(spark, s"$base/inA", perFile = true)
+        .withColumn("e1", col("s1") + incidentSec)
+        .withColumn("cell", cells(col("s1"), col("e1")))
+      val pur = streamOf(spark, s"$base/inB", perFile = true)
+        .withColumn("e2", col("s2") + purchaseSec)
+        .withColumn("cell", cells(col("s2"), col("e2")))
+      inc.join(pur, Seq("cell"))
+        .filter(col("s1") <= col("e2") && col("s2") <= col("e1"))
+        .filter(col("cell") === floor(greatest(col("s1"), col("s2")) / cellSec).cast("long"))
+        .select(col("inc_id"), col("pur_id"),
+          greatest(col("s1"), col("s2")).as("ov_start"),
+          least(col("e1"), col("e2")).as("ov_end"))
+        .withColumn("ov_sec", col("ov_end") - col("ov_start"))
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", s"$base/out")
+        .option("checkpointLocation", s"$base/ckpt").start()
     }
     spark.read.parquet(s"$base/out")
       .orderBy(col("inc_id"), col("pur_id"))
@@ -928,25 +563,14 @@ object StreamGate {
     * the oracle). */
   def streamStaleness(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = fresh(spark, "staleness")
     val ev = Tables(spark, dir).eventsSec
     val r = ev.agg(min(col("sec")).as("mn"), max(col("sec")).as("mx")).head()
     val cutoff = r.getLong(0) + (r.getLong(1) - r.getLong(0)) * 6L / 10L
-    ev.filter(!(col("event_type").isin("error", "purchase") && col("sec") > cutoff))
-      .select(timestamp_seconds(col("sec")).as("ts"),
-        col("event_type").as("source"))
-      .write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("ts", TimestampType),
-        StructField("source", StringType))))
-      .parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = EventStreams.stalenessStream(src.as[SourceEvent], 600L).toDF()
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stream_staleness")
-      .option("checkpointLocation", s"$base/ckpt")
-      .start()
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
+    gate(spark, "staleness",
+        ev.filter(!(col("event_type").isin("error", "purchase") && col("sec") > cutoff))
+          .select(timestamp_seconds(col("sec")).as("ts"), col("event_type").as("source")), 1) {
+      (src, base) => toMemory(EventStreams.stalenessStream(src.as[SourceEvent], 600L).toDF(),
+        "append", "staleness", base, Trigger.ProcessingTime(0L))
     }
     spark.table("graft_stream_staleness")
       .select(col("source"), col("last_seen_sec"))
@@ -979,29 +603,27 @@ object StreamGate {
     }
     val pa = side("error", "inc_id", "s1")
     val pb = side("purchase", "pur_id", "s2")
-    def src(path: String, id: String, s: String) = spark.readStream
-      .schema(StructType(Seq(StructField(id, LongType), StructField(s, LongType))))
-      .parquet(path)
-      .select(col(id), col(s), timestamp_seconds(col(s)).as(s"${s}_ts"))
-      .withWatermark(s"${s}_ts", "0 seconds")
-    // the G4 cell device gives the join its required EQUALITY key; the
-    // purchase side has exactly ONE cell (its own), so every (inc, pur)
-    // pair meets in exactly one exploded error cell — no pair dedup —
-    // and an error cell with no purchases contributes one null row the
-    // count() then ignores
-    val inc = src(pa, "inc_id", "s1").withColumn("cell",
-      explode(sequence(expr("(s1 - 300) div 300"), expr("(s1 + 300) div 300"))))
-    val pur = src(pb, "pur_id", "s2").withColumn("cell", expr("s2 div 300"))
-    val joined = inc.alias("inc").join(pur.alias("pur"),
-      expr("inc.cell = pur.cell AND " +
-        "s2_ts >= s1_ts - interval 300 seconds AND " +
-        "s2_ts <= s1_ts + interval 300 seconds"), "leftOuter")
-      .select(col("inc_id"), col("pur_id"))
-    sizedToInput(spark, base) {
-    val q = joined.writeStream.outputMode("append").format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt").start()
-    q.processAllAvailable(); q.stop(); q.awaitTermination()
+    def src(path: String, id: String, s: String) =
+      streamOf(spark, path, perFile = false)
+        .select(col(id), col(s), timestamp_seconds(col(s)).as(s"${s}_ts"))
+        .withWatermark(s"${s}_ts", "0 seconds")
+    runSized(spark, base) {
+      // the G4 cell device gives the join its required EQUALITY key; the
+      // purchase side has exactly ONE cell (its own), so every (inc, pur)
+      // pair meets in exactly one exploded error cell — no pair dedup —
+      // and an error cell with no purchases contributes one null row the
+      // count() then ignores
+      val inc = src(pa, "inc_id", "s1").withColumn("cell",
+        explode(sequence(expr("(s1 - 300) div 300"), expr("(s1 + 300) div 300"))))
+      val pur = src(pb, "pur_id", "s2").withColumn("cell", expr("s2 div 300"))
+      inc.alias("inc").join(pur.alias("pur"),
+          expr("inc.cell = pur.cell AND " +
+            "s2_ts >= s1_ts - interval 300 seconds AND " +
+            "s2_ts <= s1_ts + interval 300 seconds"), "leftOuter")
+        .select(col("inc_id"), col("pur_id"))
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", s"$base/out")
+        .option("checkpointLocation", s"$base/ckpt").start()
     }
     spark.read.parquet(s"$base/out")
       .filter(col("inc_id") >= 0L)
@@ -1021,22 +643,11 @@ object StreamGate {
     * uses — the two surfaces cannot drift. */
   def streamCms(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.CmsAggregate
-    val base = fresh(spark, "cms")
-    Tables(spark, dir).events
-      .select(col("event_type").as("source"), col("user_id"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("user_id", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = src.groupBy(col("source"))
-      .agg(CmsAggregate.cmsSketch(spark, col("user_id")).as("sketch"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_cms")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    gate(spark, "cms", Tables(spark, dir).events
+        .select(col("event_type").as("source"), col("user_id")), 4) {
+      (src, base) => toMemory(src.groupBy(col("source"))
+        .agg(CmsAggregate.cmsSketch(spark, col("user_id")).as("sketch")),
+        "complete", "cms", base)
     }
     graft.operators.Relational.cmsProbeFrame(spark.table("graft_stream_cms"))
   }
@@ -1051,22 +662,11 @@ object StreamGate {
     * the SAME input files the stream consumed. */
   def streamHll(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.HllAggregate
-    val base = fresh(spark, "hll")
-    Tables(spark, dir).events
-      .select(col("event_type").as("source"), col("user_id"))
-      .repartition(4).write.parquet(s"$base/in")
-    val src = spark.readStream
-      .schema(StructType(Seq(StructField("source", StringType),
-        StructField("user_id", LongType))))
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = src.groupBy(col("source"))
-      .agg(HllAggregate.hllSketch(spark, col("user_id")).as("est_distinct_users"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_hll")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val base = gate(spark, "hll", Tables(spark, dir).events
+        .select(col("event_type").as("source"), col("user_id")), 4) {
+      (src, base) => toMemory(src.groupBy(col("source"))
+        .agg(HllAggregate.hllSketch(spark, col("user_id")).as("est_distinct_users")),
+        "complete", "hll", base)
     }
     val exact = spark.read.parquet(s"$base/in")
       .groupBy(col("source"))
@@ -1081,28 +681,17 @@ object StreamGate {
     * E25's batch sketch bit-for-bit; the estimate walk is the shared
     * [[graft.operators.Relational.quantileWalk]] and the entry shares
     * E25's full oracle. The (lo, hi) domain pins from one tiny batch
-    * min/max over the same input before the stream starts (a fixed
+    * min/max over the same rows before the stream starts (a fixed
     * sketch parameter, exactly as the batch op derives it). */
   def streamQuantile(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.QuantileAggregate
-    val base = fresh(spark, "quantile")
-    Tables(spark, dir).lineitem
-      .select(col("l_returnflag"), col("l_extendedprice"))
-      .repartition(4).write.parquet(s"$base/in")
-    val in = spark.read.parquet(s"$base/in")
+    val in = Tables(spark, dir).lineitem.select(col("l_returnflag"), col("l_extendedprice"))
     val row = in.agg(min(col("l_extendedprice")), max(col("l_extendedprice"))).head()
     val (lo, hi) = (row.getDouble(0), row.getDouble(1))
-    val src = spark.readStream.schema(in.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = src.groupBy(col("l_returnflag"))
-      .agg(QuantileAggregate.quantileSketch(spark, col("l_extendedprice"), lo, hi)
-        .as("sketch"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_quantile")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    gate(spark, "quantile", in, 4) {
+      (src, base) => toMemory(src.groupBy(col("l_returnflag"))
+        .agg(QuantileAggregate.quantileSketch(spark, col("l_extendedprice"), lo, hi)
+          .as("sketch")), "complete", "quantile", base)
     }
     graft.operators.Relational.quantileWalk(
       spark.table("graft_stream_quantile"), lo, hi)
@@ -1117,27 +706,18 @@ object StreamGate {
     * invisible in the result). */
   def streamBloom(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.BloomAggregate
-    val base = fresh(spark, "bloom")
     val t = Tables(spark, dir)
-    t.customer.filter(col("c_acctbal") > 9000.0)
+    val keys = t.customer.filter(col("c_acctbal") > 9000.0)
       .select(col("c_custkey"), col("c_mktsegment"))
-      .repartition(4).write.parquet(s"$base/in")
-    val dim = spark.read.parquet(s"$base/in")
-    val nKeys = dim.count()
-    val src = spark.readStream.schema(dim.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
-    sizedToInput(spark, base) {
-    val q = src.agg(BloomAggregate.bloomAgg(spark, col("c_custkey"), nKeys).as("bits"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName("graft_stream_bloom")
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val nKeys = keys.count()
+    val base = gate(spark, "bloom", keys, 4) {
+      (src, base) => toMemory(src.agg(BloomAggregate.bloomAgg(spark, col("c_custkey"), nKeys)
+        .as("bits")), "complete", "bloom", base)
     }
     t.orders
       .join(broadcast(spark.table("graft_stream_bloom")))
       .filter(BloomAggregate.mightContain(col("bits"), col("o_custkey")))
-      .join(broadcast(dim), col("o_custkey") === col("c_custkey"))
+      .join(broadcast(spark.read.parquet(s"$base/in")), col("o_custkey") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_orders"),
         round(sum(col("o_totalprice")), 2).as("revenue"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-/** r18 forensics (VERDICT r17 item 1): `StreamGate.sizedToInput` calls
+/** r18 forensics (VERDICT r17 item 1): `StreamGate.runSized` calls
   * `GraftShims.unloadStateStores()` INSIDE the timed region (the gate's
   * finally block) — this tool measures that call's cost in isolation, in
   * both states a gate can leave behind: providers LOADED (a completed

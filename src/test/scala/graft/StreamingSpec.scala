@@ -1376,21 +1376,84 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       "publish must clean up its transient generations")
   }
 
-  test("sketch stream gates equal their batch operators row-for-row (G5-G8)") {
-    // the promotion claim in one assertion per sketch: the multi-batch
-    // streaming fold ends at the SAME report frame the batch op builds —
-    // merge associativity + order independence, end-to-end through the
-    // state store, not just at the aggregate-algebra level
-    import graft.streaming.StreamGate
-    import graft.operators.Relational
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
-    assert(rows(StreamGate.streamCms(spark, sfDir)) ==
-      rows(Relational.qCmsSketch(spark, sfDir)), "CMS stream != batch")
-    assert(rows(StreamGate.streamHll(spark, sfDir)) ==
-      rows(Relational.qHllSketch(spark, sfDir)), "HLL stream != batch")
-    assert(rows(StreamGate.streamQuantile(spark, sfDir)) ==
-      rows(Relational.qQuantileSketch(spark, sfDir)), "quantile stream != batch")
-    assert(rows(StreamGate.streamBloom(spark, sfDir)) ==
-      rows(Relational.qBloomPruneJoin(spark, sfDir)), "bloom stream != batch")
+  /** Rows of `df` over its sorted column names, in result order — the
+    * `tools/check.py` comparison rule. */
+  private def checkRows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+    df.select(df.columns.sorted.map(c => col(s"`$c`")): _*).collect().toSeq
+      .map(_.toSeq.map {
+        case d: Double if d.isNaN => "NaN"
+        case a: Array[_] => a.toSeq
+        case v => v
+      })
+
+  test("stream gates equal their batch twins row-for-row (shared oracles)") {
+    // every stream_* entry whose oracle text IS a batch entry's text must
+    // return that entry's rows: the multi-batch fold, the single-batch
+    // ledgers and the sketches end at the same frame as the one-shot op
+    val oracle = SparkEntry.oracleSql
+    val batch = oracle.toSeq.filterNot(_._1.startsWith("stream_")).sortBy(_._1)
+    val twins = oracle.keys.toSeq.filter(_.startsWith("stream_")).sorted.flatMap { s =>
+      batch.collectFirst { case (b, sql) if sql == oracle(s) => s -> b }
+    }
+    assert(twins.size >= 30, s"only ${twins.size} stream gates share a batch oracle")
+    twins.foreach { case (s, b) =>
+      assert(checkRows(SparkEntry.queries(s)(spark, sfDir)) ==
+        checkRows(SparkEntry.queries(b)(spark, sfDir)), s"$s != its twin $b")
+    }
+  }
+
+  test("a finished stream gate leaves no fold-cache entry under its root") {
+    val root = Tables.scratch(spark, "graft_stream/psi")
+    SparkEntry.queries("stream_psi")(spark, sfDir).collect()
+    val held = EventStreams.foldCacheKeys.filter(_.startsWith(root))
+    assert(held.isEmpty, s"fold cache still pins ${held.mkString(", ")}")
+  }
+
+  test("a restarted fold gate folds each input file once, replayed batch too") {
+    import org.apache.hadoop.fs.Path
+    val events = spark.read.parquet(s"$sfDir/events.parquet")
+    val ids = events.select(col("event_id")).as[Long].collect().sorted
+    val cuts = Seq(ids(ids.length / 3), ids(2 * ids.length / 3))
+    for (replay <- Seq(false, true)) {
+      val tmp = java.nio.file.Files.createTempDirectory("fold_restart").toString
+      val in = s"$tmp/in/events.parquet"
+      val stateDir = s"$tmp/state"
+      val fs = new Path(tmp).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(new Path(in))
+      // three slices of the events table, each one parquet file
+      def land(i: Int): Unit = {
+        val lo = if (i == 0) Long.MinValue else cuts(i - 1)
+        val hi = if (i == 2) Long.MaxValue else cuts(i)
+        events.filter(col("event_id") >= lo && col("event_id") < hi)
+          .coalesce(1).write.parquet(s"$tmp/stage$i")
+        val part = fs.listStatus(new Path(s"$tmp/stage$i")).map(_.getPath)
+          .find(_.getName.endsWith(".parquet")).get
+        assert(fs.rename(part, new Path(in, s"slice-$i.parquet")))
+      }
+      def start() = {
+        val src = spark.readStream.schema(events.schema)
+          .option("maxFilesPerTrigger", "1").parquet(in)
+        EventStreams.psiStream(src.withColumn("sec", Tables.epochSec(src))
+          .select(col("event_type").as("source"),
+            expr("sec div 86400").cast("long").as("day"),
+            expr("cast(round(value * 100) as long)").as("cents")), stateDir)
+      }
+      land(0); land(1)
+      val q1 = start()
+      try q1.processAllAvailable() finally q1.stop()
+      if (replay) {
+        // crash after batch 1 published its fold but before its commit:
+        // the engine replays batch 1, in a process with no fold cache
+        assert(fs.delete(new Path(s"$stateDir/_checkpoint/commits/1"), false),
+          "the fold gate keeps no checkpoint under its state dir")
+        fs.delete(new Path(s"$stateDir/_checkpoint/commits/.1.crc"), false)
+        EventStreams.releaseFolds(stateDir)
+      }
+      val q2 = start()
+      try { land(2); q2.processAllAvailable() } finally q2.stop()
+      val want = graft.operators.LoadOps.psi(spark, s"$tmp/in").orderBy(col("source"))
+      val got = spark.read.parquet(s"$stateDir/report").orderBy(col("source"))
+      assert(checkRows(got) == checkRows(want), s"report != mon_psi (replay=$replay)")
+    }
   }
 }
